@@ -14,31 +14,30 @@ Reference parity:
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from taps_spark.transfer.progress import ProgressMeter
+
+
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for `path`, whatever its scheme."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
 def _read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
     """Read a parquet target, returning None ONLY when the path does
-    not exist yet. Any other failure (corrupt footer, permission,
-    transient FS error) re-raises: treating it as "sink empty" would
-    silently drop or re-duplicate data downstream."""
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        cond = None
-        for attr in ("getCondition", "getErrorClass"):
-            fn = getattr(e, attr, None)
-            if fn is not None:
-                try:
-                    cond = fn()
-                    break
-                except Exception:  # pragma: no cover - defensive
-                    continue
-        if cond == "PATH_NOT_FOUND" or (cond is None and "PATH_NOT_FOUND" in str(e)):
-            return None
-        raise
+    not exist yet. Existence is asked of the filesystem, so any failure
+    to read a present target (corrupt footer, permission, transient FS
+    error) raises: treating it as "sink empty" would silently drop or
+    re-duplicate data downstream."""
+    fs, p = _fs_path(spark, path)
+    if not fs.exists(p):
+        return None
+    return spark.read.parquet(path)
 
 
 def write_parquet(
@@ -63,20 +62,41 @@ def append_idempotent(
 
     The anti-join ships only the sink's key columns (column-pruned
     parquet scan), shuffles on the key, and makes retried transfers
-    exactly-once-per-key. Returns the number of appended rows
-    (one count action; the write reuses the cached frame).
+    exactly-once-per-key. Returns the number of appended rows, observed
+    during the write itself (transfer/progress.py): one write, no
+    count job, no cache.
+
+    A missing target is created with the frame's schema, even when no
+    row is new. Into an existing target the write lands in a hidden
+    `_`-prefixed staging directory (readers skip it), whose part files
+    move up only when rows were appended: Spark writes a schema-only
+    file even for an empty frame, and a replayed append must leave the
+    target's file listing unchanged.
     """
+    meter, name = ProgressMeter(), f"append_{uuid.uuid4().hex}"
     target = _read_parquet_if_exists(spark, path)
-    existing = None if target is None else target.select(*key_cols)
-    out = df if existing is None else df.join(existing, key_cols, "left_anti")
-    out = out.cache()
+    if target is None:
+        write_parquet(meter.instrument(name, df), path, codec=codec)
+        return meter.harvest(name)
+
+    out = df.join(target.select(*key_cols), key_cols, "left_anti")
+    fs, root = _fs_path(spark, path)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    staging = Path(root, f"_{name}")
     try:
-        n = out.count()
+        write_parquet(meter.instrument(name, out), staging.toString(), codec=codec)
+        n = meter.harvest(name)
         if n:
-            write_parquet(out, path, mode="append", codec=codec)
+            for st in fs.listStatus(staging):
+                src = st.getPath()
+                if src.getName().startswith(("_", ".")):
+                    continue  # commit marker, checksum sidecar
+                dst = Path(root, src.getName())
+                if not fs.rename(src, dst):
+                    raise IOError(f"append_idempotent: could not move {src} to {dst}")
         return n
     finally:
-        out.unpersist()
+        fs.delete(staging, True)
 
 
 def write_jdbc(
@@ -98,28 +118,6 @@ def write_jdbc(
         .option("batchsize", str(batchsize))
         .options(**options)
         .save()
-    )
-
-
-def checksum_frame(df: DataFrame, key_cols: list[str] | None = None) -> DataFrame:
-    """Order-insensitive content digest of a whole DataFrame:
-    count + sum/xor-style aggregates over a per-row hash of ALL
-    columns (nulls sentineled) — the engine's replacement for the
-    reference's per-chunk CRC32 (#16, lib/taps/utils.rb:25-31).
-
-    Comparable across engines only via its row-hash construction when
-    values render identically; for Spark↔Spark (source vs sink) it is
-    exact. Returns a 1-row DataFrame (n_rows, xor_hash, sum_hash).
-    """
-    cols = key_cols or df.columns
-    row_h = F.xxhash64(*[F.col(c) for c in cols])
-    return df.agg(
-        F.count("*").alias("n_rows"),
-        # Two independent order-insensitive lanes: xor and sum of the
-        # row hashes. Sum in decimal(38,0) — a long sum would overflow
-        # and Spark 4's default ANSI mode turns that into an error.
-        F.bit_xor(row_h).alias("xor_hash"),
-        F.sum(row_h.cast("decimal(38,0)")).alias("sum_hash"),
     )
 
 

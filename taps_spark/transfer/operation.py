@@ -9,9 +9,14 @@ one table at a time, one chunk in flight, over HTTP. The
 BEFORE the data phase (slower load, but constraints hold during it).
 
 The Spark engine keeps the PHASE ORDER but parallelizes the data
-plane: every table is a partitioned DataFrame read → validated →
-idempotent append; completed tables land in a resume manifest; a
-checksum verification pass closes the job. Endpoints are abstracted
+plane. Every table is read once into a partitioned DataFrame, then
+validated → idempotent append (rows counted by an observed metric
+during the write) → checksum-verified against that same source frame
+(transfer/verify: one aggregate over both sides); only a verified
+table lands in the resume manifest. A keyed parquet table new to the
+target costs five Spark jobs: the source's schema inference, the
+write, the target's schema inference and the two-job digest (a rerun
+adds the target's key read and the anti-join). Endpoints are abstracted
 as `Endpoint`s — a parquet directory (testable everywhere) or a live
 JDBC database (io/jdbc.JdbcEndpoint: partitioned keyset reads,
 batched writes, real DDL execution).
@@ -235,22 +240,22 @@ class TransferOperation:
 
     def _transfer_one(self, spark: SparkSession, table: str) -> tuple[int, bool]:
         """Move one table and verify it; safe to run on a worker
-        thread (no shared mutable state except the locked manifest)."""
+        thread (no shared mutable state except the locked manifest).
+
+        The source is read once: the data plane and verify share the
+        frame (one listing and schema inference, one JDBC plan)."""
         from taps_spark.transfer.progress import ProgressMeter
 
+        source = self.source.read(spark, table)
         pk = self._single_int_pk(table)
         if self.chunk_rows and pk is not None:
-            n = self._transfer_chunked(spark, table, pk)
+            n = self._transfer_chunked(spark, table, source, pk)
         else:
-            n = self._transfer_whole(spark, table, ProgressMeter())
+            n = self._transfer_whole(spark, table, source, ProgressMeter())
         if self.verify:
             # CorruptedData propagates: the table is left out of the
             # manifest, and the next (idempotent) run repairs it.
-            verify_or_raise(
-                self.source.read(spark, table),
-                self.target.read(spark, table),
-                table,
-            )
+            verify_or_raise(source, self.target.read(spark, table), table)
             return n, True
         return n, False
 
@@ -258,8 +263,7 @@ class TransferOperation:
         cols = self.key_cols.get(table)
         return cols[0] if cols and len(cols) == 1 else None
 
-    def _transfer_whole(self, spark: SparkSession, table: str, meter) -> int:
-        df = self.source.read(spark, table)
+    def _transfer_whole(self, spark: SparkSession, table: str, df: DataFrame, meter) -> int:
         if table in self.rules:
             df = enforce(df, self.rules[table])
         # Meter rows during the write itself (§2a-23 parity) —
@@ -271,16 +275,16 @@ class TransferOperation:
             n = meter.harvest(table)
         return n
 
-    def _transfer_chunked(self, spark: SparkSession, table: str, pk: str) -> int:
+    def _transfer_chunked(self, spark: SparkSession, table: str, df: DataFrame, pk: str) -> int:
         """Chunked data plane with a per-chunk manifest watermark.
 
         Chunks are pk-RANGE slices (keyset semantics, not offsets —
         the reference's scan cliff, README.rdoc:36, does not apply).
         Every chunk is itself a parallel partitioned write; the chunk
-        loop only bounds how much work a crash can lose.
+        loop only bounds how much work a crash can lose. `df` is the
+        whole source; the watermark filter applies to this call's copy.
         """
         wm = self.manifest.watermark(table)
-        df = self.source.read(spark, table)
         if table in self.rules:
             df = enforce(df, self.rules[table])
         if wm is not None:
@@ -293,7 +297,10 @@ class TransferOperation:
             F.max(pk).alias("hi"),
         ).head()
         if stats["n"] == 0:
-            return 0  # nothing left past the watermark
+            # Nothing left past the watermark. The (idempotent) empty
+            # write still creates a missing target with its schema.
+            self.target.write(spark, table, df, self.key_cols.get(table))
+            return 0
         lo, hi = int(stats["lo"]), int(stats["hi"])
         n_chunks = max(1, math.ceil(int(stats["n"]) / self.chunk_rows))
         step = max(1, math.ceil((hi - lo + 1) / n_chunks))

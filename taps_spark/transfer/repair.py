@@ -11,7 +11,7 @@ module closes the loop the scalable way:
 
 Chunk audit compares per-chunk row counts AND order-insensitive
 row-hash digests (xxhash64 xor/sum lanes, the same construction as
-io/sinks.checksum_frame), so it catches missing rows and corrupted
+transfer/verify.compare), so it catches missing rows and corrupted
 values alike. Everything shuffles (chunk_id, count, hash) triples —
 |table|/chunk_rows rows of three longs — never the data itself.
 

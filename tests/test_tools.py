@@ -237,13 +237,26 @@ def test_touched_queries_hunk_parser():
     assert parse_hunks(diff) == [(10, 12), (22, 22), (31, 32)]
 
 
-def test_touched_queries_span_resolution():
+def test_touched_queries_span_resolution(tmp_path, monkeypatch):
     """Def-level resolution: the r13 generator must (a) return the
     empty set for an empty diff, (b) include a query whose own function
     changed, and (c) NOT blanket-include whole modules when every hunk
     lands inside specific defs (the 334/379 dilution this tool
-    replaced)."""
+    replaced).
+
+    The empty diff is taken in a scratch repo whose tree matches HEAD,
+    so uncommitted edits in the surrounding checkout cannot leak in."""
+    import subprocess
+
+    import tools.touched_queries as tq
     from tools.touched_queries import _top_level_spans, touched_for_rotation
+
+    (tmp_path / "taps_spark").mkdir()
+    (tmp_path / "taps_spark" / "mod.py").write_text("def f():\n    return 1\n")
+    git = ["git", "-c", "user.name=t", "-c", "user.email=t@t"]
+    for cmd in (["init", "-q"], ["add", "."], ["commit", "-q", "-m", "seed"]):
+        subprocess.run(git + cmd, cwd=tmp_path, check=True)
+    monkeypatch.setattr(tq, "REPO", str(tmp_path))
 
     assert touched_for_rotation("HEAD") == set()
 

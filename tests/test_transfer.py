@@ -492,3 +492,139 @@ def test_merge_upsert_partitioned_null_partition_survivors(spark, tmp_path):
             (4, "d", "p2"),
         }, variant
         assert stats == {"updated": 2, "inserted": 0, "partitions": 2}, variant
+
+
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _cached_rdd_ids(spark) -> set[int]:
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return {i.id() for i in infos if i.numCachedPartitions() > 0}
+
+
+def _file_listing(root: str) -> dict[str, bytes]:
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out
+
+
+@pytest.mark.parametrize("chunk_rows", [None, 100])
+def test_keyed_transfer_of_empty_source_lands_and_verifies(spark, sf_dir, tmp_path, chunk_rows):
+    """A 0-row source table still lands, whole or chunked: the target
+    is created with the source's schema, so the verify pass can read
+    it and agree."""
+    src = tmp_path / "src"
+    load_table(spark, sf_dir, "orders").limit(0).write.parquet(str(src / "orders.parquet"))
+    target = str(tmp_path / "lake")
+    r = TransferOperation(
+        source=ParquetEndpoint(str(src)),
+        target=ParquetEndpoint(target),
+        manifest=TransferManifest.load(str(tmp_path / "m.json")),
+        key_cols={"orders": ["o_orderkey"]},
+        chunk_rows=chunk_rows,
+    ).run(spark)
+    assert r.transferred == {"orders": 0}
+    assert r.verified == ["orders"]
+    landed = spark.read.parquet(f"{target}/orders.parquet")
+    assert landed.count() == 0
+    assert landed.schema == spark.read.parquet(str(src / "orders.parquet")).schema
+
+
+def test_replayed_append_leaves_target_files_unchanged(spark, sf_dir, target_dir):
+    """A replay appends nothing and adds no file, not even the
+    schema-only one Spark writes for an empty frame; the hidden
+    staging directory is gone afterwards."""
+    nation = load_table(spark, sf_dir, "nation")
+    path = f"{target_dir}/nation.parquet"
+    assert sinks.append_idempotent(spark, nation, path, ["n_nationkey"]) == 25
+    before = _file_listing(path)
+    assert sinks.append_idempotent(spark, nation, path, ["n_nationkey"]) == 0
+    assert _file_listing(path) == before
+    assert sorted(os.listdir(path)) == sorted({p.split(os.sep)[0] for p in before})
+
+
+def test_transfer_job_counts(spark, sf_dir, tmp_path):
+    """Job counts are deterministic, so pin them: a fresh keyed,
+    verified parquet table is source schema inference + write + target
+    schema inference + the two-job digest; the rerun adds the target
+    key read and the anti-join's broadcast. Nothing stays cached."""
+    a = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    b = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    j = _next_job_id(spark)
+    assert compare(a, b).ok
+    assert _next_job_id(spark) - j == 2
+
+    cached = _cached_rdd_ids(spark)
+
+    def pull(manifest: str):
+        j = _next_job_id(spark)
+        r = TransferOperation(
+            source=ParquetEndpoint(sf_dir),
+            target=ParquetEndpoint(str(tmp_path / "lake")),
+            manifest=TransferManifest.load(str(tmp_path / manifest)),
+            table_pattern="^orders$",
+            key_cols={"orders": ["o_orderkey"]},
+        ).run(spark)
+        assert r.verified == ["orders"]
+        return r.transferred["orders"], _next_job_id(spark) - j
+
+    n, jobs = pull("pull.json")
+    assert n > 0 and jobs <= 5
+    n, jobs = pull("rerun.json")
+    assert n == 0 and jobs <= 7
+    assert _cached_rdd_ids(spark) <= cached
+
+
+def _head_digest(df, cols):
+    """The per-side global aggregate the digest was defined by before
+    both sides shared one aggregate."""
+    row_h = F.xxhash64(*[F.col(c) for c in cols])
+    r = df.select(*cols).agg(
+        F.count("*").alias("n"),
+        F.bit_xor(row_h).alias("x"),
+        F.sum(row_h.cast("decimal(38,0)")).alias("s"),
+    ).collect()[0]
+    return r["n"], r["x"], int(r["s"] or 0)
+
+
+def test_digest_matches_per_side_formula(spark, tmp_path):
+    """compare's one-aggregate digest equals the per-side formula, on
+    rows with nulls, across a sink whose column order differs, and
+    per side in that side's own column types (hashing before the union
+    keeps an int source from being hashed as the sink's bigint)."""
+    from datetime import date
+
+    src = spark.createDataFrame(
+        [
+            (1, "a", 1.5, date(2020, 1, 1)),
+            (2, None, None, date(2020, 1, 2)),
+            (3, "c", 2.5, None),
+            (None, None, None, None),
+        ],
+        "id int, name string, val double, d date",
+    )
+    path = str(tmp_path / "reordered")
+    src.select("d", "val", "name", "id").write.parquet(path)
+    sink = spark.read.parquet(path)
+    cols = sorted(src.columns)
+
+    r = compare(src, sink)
+    want = _head_digest(src, cols)
+    assert want[0] == 4 and want[1] is not None
+    assert (r.n_rows[0], r.xor_hash[0], r.sum_hash[0]) == want
+    assert (r.n_rows[1], r.xor_hash[1], r.sum_hash[1]) == want
+    assert r.ok
+
+    wide = sink.withColumn("id", F.col("id").cast("bigint"))
+    r = compare(src, wide)
+    assert (r.n_rows[0], r.xor_hash[0], r.sum_hash[0]) == want
+    assert (r.n_rows[1], r.xor_hash[1], r.sum_hash[1]) == _head_digest(wide, cols)
+    assert r.xor_hash[0] != r.xor_hash[1]
+
+    empty = compare(src.limit(0), sink.limit(0))
+    assert empty.n_rows == (0, 0) and empty.xor_hash == (None, None) and empty.ok
