@@ -242,7 +242,6 @@ def topk_ivf(
     recall/cost dial: nprobe=nlist degenerates to brute force.
     """
     cents = train_ivf_centroids(emb, nlist=nlist, iters=iters, id_col=id_col, vec_col=vec_col)
-    cents = cents.persist()
     corpus = assign_nearest_centroid(
         emb.select(F.col(id_col), as_double(F.col(vec_col)).alias("v")).withColumnRenamed(
             id_col, "_id"
@@ -467,7 +466,7 @@ def topk_pq(
     sub = dim // m
     cents = train_pq_codebooks(
         emb, m=m, ksub=ksub, dim=dim, iters=iters, id_col=id_col, vec_col=vec_col
-    ).persist()
+    )
     dv = emb.select(F.col(id_col).alias("_id"), l2_normalize(F.col(vec_col)).alias("v"))
     subs = dv.select(
         "_id",

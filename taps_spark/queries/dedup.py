@@ -231,14 +231,10 @@ def dedup_lsh_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the md5 hash family keeps every stage reproducible in it. Per-doc
     rollup output stays linear in docs.
     """
-    grp = _condensed_prelude_cached(spark, sf_dir)[0]
-    # Materialized (src, dst, j) scores, shared process-wide: the
-    # checkpoint pins single evaluation of the intersection (filtering
-    # j >= 0.5 inline would re-evaluate it per consumer path) and the
-    # sweep/CC/purge queries reuse the same frame.
-    gscored = _verified_scores_cached(spark, sf_dir)
+    prelude = _lsh_prelude(spark, sf_dir)
+    gscored = _verified_scores(prelude, 0.5)
     return (
-        _fan_out_doc_pairs(grp, gscored.filter(F.col("j") >= 0.5))
+        _fan_out_doc_pairs(prelude[0], gscored.filter(F.col("j") >= 0.5))
         .groupBy("doc_a")
         .agg(
             F.count("*").alias("n_dups"),
@@ -459,137 +455,16 @@ def _condensed_prelude(
     return grp, cand, ta, tb
 
 
-#: Process-wide memo for the LSH signature/banding stage, keyed by
-#: (applicationId, sf_dir, LSH params[, threshold]). The three
-#: heaviest registry queries (verified-pairs, threshold-sweep,
-#: sampled-verify) and the CC/purge family each rebuilt the IDENTICAL
-#: tokenize→group→sign→band→bucket pipeline from scratch per query —
-#: at 100 TB the signature frame is a materialized artifact every
-#: dedup consumer reads, not something each job recomputes. The memo
-#: holds only localCheckpoint-backed frames (grp / band buckets /
-#: gedges: KBs–MBs per (gid, band) row, never raw text), so reuse is
-#: a block read. applicationId in the key drops entries from a
-#: stopped SparkContext (a new session gets a new id → clean miss).
-_PRELUDE_CACHE: dict = {}
-
-
-def _evict_stale_prelude(app_id: str) -> None:
-    """Drop cache entries from any OTHER applicationId on insert: a
-    stopped SparkContext's frames are dead weight (their checkpoint
-    blocks are gone with the context), and without eviction the memo
-    grows without bound across sessions in one process (r8 ADVICE).
-    Live entries for the CURRENT app stay — they pin localCheckpoint
-    blocks on purpose; that is the memo."""
-    for k in [k for k in _PRELUDE_CACHE if k[1] != app_id]:
-        del _PRELUDE_CACHE[k]
-
-
-def _condensed_prelude_cached(
+def _lsh_prelude(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """_condensed_prelude over the standard documents load, memoized
-    per (SparkContext, sf_dir, LSH params). Byte-identical outputs:
-    the builder is deterministic (md5 hash family), so the first
-    caller's checkpointed frames ARE the result every later caller
-    would have computed."""
-    import os
-
-    key = (
-        "prelude",
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        LSH_NUM_HASHES,
-        LSH_ROWS_PER_BAND,
-        LSH_N_BANDS,
-    )
-    hit = _PRELUDE_CACHE.get(key)
-    if hit is None:
-        _evict_stale_prelude(spark.sparkContext.applicationId)
-        docs = parallelize_cpu(
-            load_tables(spark, sf_dir, ("documents",))["documents"]
-        )
-        hit = _PRELUDE_CACHE[key] = _condensed_prelude(docs)
-    return hit
-
-
-def _verified_scores_cached(
-    spark: SparkSession, sf_dir: str, prefilter: float = 0.5
-) -> DataFrame:
-    """Memoized verify stage: gscored[src, dst, j] — exact token-set
-    Jaccard for every candidate group pair passing the (lossless)
-    size-ratio prefilter at `prefilter`, localCheckpoint-materialized.
-
-    ONE scoring pass at the LOOSEST threshold any consumer needs
-    (0.5) serves them all: the ratio prefilter is lossless for
-    j >= t whenever prefilter <= t, so `gscored@0.5.filter(j >= t)`
-    is set-identical to a dedicated prefilter(t)+verify pass for any
-    t >= 0.5. Verified-pairs (0.5), the threshold sweep (0.7/0.8/0.9)
-    and the CC/purge graph (0.9) previously each ran their own
-    intersections over the same candidates — the single 0.5 pass
-    costs ~1.2× one 0.9 pass and replaces three."""
-    import os
-
-    key = (
-        "scores",
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        LSH_NUM_HASHES,
-        LSH_ROWS_PER_BAND,
-        LSH_N_BANDS,
-        prefilter,
-    )
-    hit = _PRELUDE_CACHE.get(key)
-    if hit is None:
-        _evict_stale_prelude(spark.sparkContext.applicationId)
-        from taps_spark.operators.dedup import jaccard_hashed
-
-        grp, cand, ta, tb = _condensed_prelude_cached(spark, sf_dir)
-        hit = _PRELUDE_CACHE[key] = (
-            cand.join(ta, "src")
-            .join(tb, "dst")
-            .filter(_ratio_prefilter(prefilter))
-            .select(
-                "src",
-                "dst",
-                jaccard_hashed(F.col("toks_a"), F.col("toks_b")).alias("j"),
-                # Set sizes ride along so a consumer with a TIGHTER
-                # threshold can re-apply its exact ratio prefilter
-                # (_ratio_refilter) and see the byte-identical input
-                # set a dedicated pass would have produced — including
-                # degenerate fixtures where the j-filter alone would
-                # change the row count of a GROUP BY over the pairs.
-                F.size("toks_a").alias("na"),
-                F.size("toks_b").alias("nb"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return hit
-
-
-def _ratio_refilter(threshold: float):
-    """_ratio_prefilter re-applied over the memoized score frame's
-    carried (na, nb) sizes — same k = floor(10t) bound."""
-    import math
-
-    k = math.floor(threshold * 10 + 1e-9)
-    return (10 * F.col("na") >= k * F.col("nb")) & (
-        10 * F.col("nb") >= k * F.col("na")
-    )
-
-
-def _condensed_group_graph_cached(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.9
-) -> tuple[DataFrame, DataFrame]:
-    """_condensed_group_graph via the memoized score frame: both CC
-    variants and the purge query consume the IDENTICAL verified
-    0.9-graph, and the scores themselves are shared with the
-    verified-pairs/sweep family (threshold >= the 0.5 score grain
-    keeps the derivation lossless)."""
-    assert threshold >= 0.5, "shared score frame is scored at prefilter 0.5"
-    grp = _condensed_prelude_cached(spark, sf_dir)[0]
-    gscored = _verified_scores_cached(spark, sf_dir)
-    gedges = gscored.filter(F.col("j") >= threshold).select("src", "dst")
-    return grp, gedges
+    """_condensed_prelude over the standard documents load. Each
+    consumer builds it once per invocation and passes it down; nothing
+    outlives the call, so a documents.parquet rewritten in place is
+    always read afresh. Reuse of the signature frame across queries
+    is dedup_lsh_incremental's explicit state."""
+    docs = parallelize_cpu(load_tables(spark, sf_dir, ("documents",))["documents"])
+    return _condensed_prelude(docs)
 
 
 def _ratio_prefilter(threshold: float):
@@ -609,11 +484,13 @@ def _ratio_prefilter(threshold: float):
     )
 
 
-def _condensed_group_graph(
-    docs: DataFrame, threshold: float = 0.9
-) -> tuple[DataFrame, DataFrame]:
-    """Verified group graph at `threshold`: (grp, gedges[src, dst]),
-    gedges MATERIALIZED (localCheckpoint).
+def _verified_scores(
+    prelude: tuple[DataFrame, DataFrame, DataFrame, DataFrame], threshold: float
+) -> DataFrame:
+    """Verify stage: gscored[src, dst, j] — exact token-set Jaccard for
+    every candidate group pair passing the (lossless) size-ratio
+    prefilter at `threshold`, MATERIALIZED (localCheckpoint). Callers
+    filter `j >= t` for any t >= threshold.
 
     The Jaccard is computed in a projection and the threshold filter
     runs on the materialized scalar — NOT filtered inline. Filtering
@@ -625,21 +502,12 @@ def _condensed_group_graph(
     evaluates TWICE per pair (numerator + union denominator).
     Measured at sf0.1: 11.4M intersect evaluations instead of 1.9M —
     materializing the same verify 18.9 s vs 5.5 s. The checkpoint is
-    the pushdown barrier (verified-pairs uses the identical shape),
-    and both CC variants consume gedges several times anyway."""
-    return _group_graph_from_prelude(_condensed_prelude(docs), threshold)
-
-
-def _group_graph_from_prelude(
-    prelude: tuple[DataFrame, DataFrame, DataFrame, DataFrame],
-    threshold: float,
-) -> tuple[DataFrame, DataFrame]:
-    """The verify stage of _condensed_group_graph, split out so the
-    memoized prelude (and memoized graph) reuse one definition."""
+    that pushdown barrier, and it pins single evaluation for the
+    consumers that read the scores more than once (CC, fan-out)."""
     from taps_spark.operators.dedup import jaccard_hashed
 
-    grp, cand, ta, tb = prelude
-    scored = (
+    _, cand, ta, tb = prelude
+    return (
         cand.join(ta, "src")
         .join(tb, "dst")
         .filter(_ratio_prefilter(threshold))
@@ -648,8 +516,6 @@ def _group_graph_from_prelude(
         )
         .localCheckpoint(eager=True)
     )
-    gedges = scored.filter(F.col("j") >= threshold).select("src", "dst")
-    return grp, gedges
 
 
 def _fan_out_doc_pairs(grp: DataFrame, gscored: DataFrame) -> DataFrame:
@@ -723,8 +589,8 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     why the Spark side iterates instead.
 
     Both the query and the oracle condense docs with identical token
-    sets into group nodes first (_condensed_group_graph — exact, and
-    the contraction then runs on the far smaller group graph).
+    sets into group nodes first (_condensed_prelude — exact, and the
+    contraction then runs on the far smaller group graph).
 
     ROUTING (r10 VERDICT task #1): this query previously ran the
     pedagogical min-label propagation variant and a separate
@@ -741,8 +607,9 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from taps_spark.operators.dedup import connected_components_star
 
-    grp, gedges = _condensed_group_graph_cached(spark, sf_dir)
-    return _condensed_rollup(grp, connected_components_star(gedges))
+    prelude = _lsh_prelude(spark, sf_dir)
+    gedges = _verified_scores(prelude, 0.9).filter(F.col("j") >= 0.9).select("src", "dst")
+    return _condensed_rollup(prelude[0], connected_components_star(gedges))
 
 
 SIMHASH_PORTABLE_ORACLE = """
@@ -1150,7 +1017,7 @@ def _lsh_probe_scores(docs: DataFrame, new_ids: DataFrame) -> DataFrame:
     # (>= 0.5 / 0.8), and without the barrier that filter folds into
     # the verify join's residual condition where the intersect
     # evaluates twice per pair for every candidate (see
-    # _condensed_group_graph). Group-level pairs, so the frame is
+    # _verified_scores). Group-level pairs, so the frame is
     # small.
     cross = (
         cand.filter(F.col("src") != F.col("dst"))
@@ -1604,16 +1471,9 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     SCALE.md round-5 notes.) Measured at sf0.1: 30.3 s -> 27.2 s.
     Prefilter at 0.7, the smallest swept threshold, is lossless.
     """
-    grp = _condensed_prelude_cached(spark, sf_dir)[0]
-    # Shared memoized scores at prefilter 0.5; re-applying the exact
-    # 0.7 ratio bound over the carried sizes reproduces the dedicated
-    # prefilter(0.7) pass's input set byte-identically.
-    gscored = (
-        _verified_scores_cached(spark, sf_dir)
-        .filter(_ratio_refilter(0.7))
-        .select("src", "dst", "j")
-    )
-    swept = _fan_out_doc_pairs(grp, gscored).select(
+    prelude = _lsh_prelude(spark, sf_dir)
+    gscored = _verified_scores(prelude, 0.7)
+    swept = _fan_out_doc_pairs(prelude[0], gscored).select(
         "doc_a", "doc_b", "j",
         F.explode(F.array(F.lit(0.7), F.lit(0.8), F.lit(0.9))).alias("threshold"),
     )
@@ -1922,11 +1782,10 @@ def dedup_lsh_sampled_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: exact integer counts and one ppm fold.
 
-    Cost anatomy (r10 VERDICT task #7, warm-prelude sf0.1 profile):
-    the prelude memo IS hit on this path (grp build 16.8 s happens
-    once per session, shared with the whole LSH family); the query's
-    own ~14 s was (a) counting n_candidates by a SECOND pass over the
-    exploded doc-pair stream, (b) verifying via a distinct+re-join
+    Cost anatomy (r10 VERDICT task #7, sf0.1 profile): beyond the
+    prelude build (grp build 16.8 s), the query's own ~14 s was
+    (a) counting n_candidates by a SECOND pass over the exploded
+    doc-pair stream, (b) verifying via a distinct+re-join
     that recomputed the explode subtree again, and (c) a sampling key
     whose conv(hex,16,10) radix parse doubled the md5's own cost over
     9.9M pairs. All three fixed below: group-size arithmetic for the
@@ -1934,7 +1793,7 @@ def dedup_lsh_sampled_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from taps_spark.operators.dedup import jaccard_hashed
 
-    grp, cand, ta, tb = _condensed_prelude_cached(spark, sf_dir)
+    grp, cand, ta, tb = _lsh_prelude(spark, sf_dir)
     # Fan group-pair candidates to doc pairs CARRYING (src, dst): the
     # sampled pairs then need zero doc->group re-joins to find their
     # verify key (an earlier draft re-joined a members-exploded map
@@ -2192,7 +2051,7 @@ def pipeline_near_dup_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     in one plan.
 
     Scale: the verified group graph comes from the condensed prelude
-    (_condensed_group_graph — Jaccard once per distinct-content group
+    (_verified_scores — Jaccard once per distinct-content group
     pair); the drop set fans out as pure scalars, stays doc-linear,
     and applies as one broadcast-able anti-join against the corpus.
 
@@ -2200,9 +2059,10 @@ def pipeline_near_dup_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs no tie-breaking randomness (doc_id is the canonical order).
     """
     docs = parallelize_cpu(load_tables(spark, sf_dir, ("documents",))["documents"])
-    grp, gedges = _condensed_group_graph_cached(spark, sf_dir, threshold=0.9)
+    prelude = _condensed_prelude(docs)
+    gedges = _verified_scores(prelude, 0.9).filter(F.col("j") >= 0.9).select("src", "dst")
     dropped = (
-        _fan_out_doc_pairs(grp, gedges.withColumn("j", F.lit(1.0)))
+        _fan_out_doc_pairs(prelude[0], gedges.withColumn("j", F.lit(1.0)))
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )
@@ -2313,9 +2173,9 @@ def dedup_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     committing a banding config at corpus scale, where r trades
     verify volume against recall.
 
-    Scale: rides the shared memoized signature/score stages
-    (_condensed_prelude_cached / _verified_scores_cached) — the only
-    new work is four scalar probability columns over the verified
+    Scale: the signature/score stages are the family's shared
+    definitions (_lsh_prelude / _verified_scores) — the only new
+    work is four scalar probability columns over the verified
     pair stream and a 4-config rollup.
 
     Determinism: p is computed with explicit squaring chains
@@ -2323,9 +2183,9 @@ def dedup_minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     differ by an ulp), quantized to an integer 1e-9 grid per pair,
     then summed exactly.
     """
-    grp = _condensed_prelude_cached(spark, sf_dir)[0]
-    gscored = _verified_scores_cached(spark, sf_dir)
-    pairs = _fan_out_doc_pairs(grp, gscored.filter(F.col("j") >= 0.5)).filter(
+    prelude = _lsh_prelude(spark, sf_dir)
+    gscored = _verified_scores(prelude, 0.5)
+    pairs = _fan_out_doc_pairs(prelude[0], gscored.filter(F.col("j") >= 0.5)).filter(
         F.col("j") >= 0.5
     )
     j = F.col("j")

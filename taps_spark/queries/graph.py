@@ -330,10 +330,11 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter — the same two shuffles per iteration as PageRank, with
     localCheckpoint truncating lineage. Rounds are data-bounded
     (each round removes ≥ 1 node or terminates); the loop exits on a
-    fixpoint test over a 1-row count, not a collected node list. At
-    100 TB the edge list is bucketed by u so the per-round join is
-    exchange-free; peeling k cores shares the thresholded edge base
-    every graph query here uses (support ≥ 2 keeps the graph sparse,
+    fixpoint test over a 1-row count, not a collected node list, and
+    raises if 50 rounds pass without one (a long chain peels only its
+    two ends per round). At 100 TB the edge list is bucketed by u so
+    the per-round join is exchange-free; peeling k cores shares the
+    thresholded edge base every graph query here uses (support ≥ 2 keeps the graph sparse,
     see graph_triangle_count).
     """
     edges0 = _copurchase_edges(spark, sf_dir).localCheckpoint()
@@ -376,6 +377,11 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .join(keep.select(F.col("node").alias("v")), "v", "left_semi")
                 .select("u", "v")
                 .localCheckpoint(eager=False)
+            )
+        else:
+            raise RuntimeError(
+                f"graph_kcore: {k}-core not converged after 50 peeling rounds "
+                "(node set still shrinking)"
             )
         stats = edges.agg(
             F.count(F.lit(1)).alias("n_core_edges"),

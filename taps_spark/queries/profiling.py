@@ -2268,7 +2268,7 @@ def stats_kendall_tau_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # Materialization strategy (r13, adjudicated by interleaved A/B —
-    # tools/ab_kendall_r13.py): checkpoint the GRID, not the value
+    # OPTIMIZATION_r13.md): checkpoint the GRID, not the value
     # grain. The r12 shape (eager (flag, x, y) value-grain checkpoint)
     # executed the lineitem⋈orders join once but serialized the whole
     # query behind a multi-hundred-k-row materialization, and the

@@ -1480,19 +1480,19 @@ def similarity_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     nlist = 16
-    cents = train_ivf_centroids(emb, nlist=nlist, iters=1).persist()
+    cents = train_ivf_centroids(emb, nlist=nlist, iters=1)
     # Same dedup for the assignment pass (vec -> nearest centroid):
-    # lazily shared by all 4 probe joins instead of re-assigned per
-    # point. At serving scale this materialization IS the IVF index
-    # (posting lists keyed by centroid), so caching it inside the
-    # build is the intended artifact shape, not an extra copy.
+    # assigned once and shared by all 4 probe joins instead of
+    # re-assigned per point. At serving scale this materialization IS
+    # the IVF index (posting lists keyed by centroid), so checkpointing
+    # it inside the build is the intended artifact shape, not an extra
+    # copy.
     corpus = assign_nearest_centroid(
         emb.select("vec_id", as_double(F.col("embedding")).alias("v")).withColumnRenamed(
             "vec_id", "_id"
         ),
         cents,
-    ).select(F.col("_id").alias("vec_id"), "v", "centroid_id").persist()
-    corpus.count()  # force the cache: one assignment pass, race-free
+    ).select(F.col("_id").alias("vec_id"), "v", "centroid_id").localCheckpoint(eager=True)
     qv = queries.select("q_id", as_double(F.col("q_vec")).alias("qv"))
     d2 = F.aggregate(
         F.zip_with(F.col("qv"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
@@ -1504,7 +1504,7 @@ def similarity_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         qv.join(F.broadcast(cents))
         .select("q_id", "qv", "centroid_id", d2.alias("_d"))
         .withColumn("_pr", F.row_number().over(wprobe))
-    ).persist()
+    ).localCheckpoint(eager=True)
 
     out = None
     for nprobe in (1, 2, 4, 16):

@@ -211,7 +211,11 @@ def test_condensed_group_graph_semantics(spark):
     verify as group edges; component rollup fans group sizes back out
     and excludes only true singletons."""
     from taps_spark.operators.dedup import connected_components
-    from taps_spark.queries.dedup import _condensed_group_graph, _condensed_rollup
+    from taps_spark.queries.dedup import (
+        _condensed_prelude,
+        _condensed_rollup,
+        _verified_scores,
+    )
 
     docs = spark.createDataFrame(
         [
@@ -232,7 +236,9 @@ def test_condensed_group_graph_semantics(spark):
         ],
         ["doc_id", "text"],
     )
-    grp, gedges = _condensed_group_graph(docs, threshold=0.9)
+    prelude = _condensed_prelude(docs)
+    grp = prelude[0]
+    gedges = _verified_scores(prelude, 0.9).filter("j >= 0.9").select("src", "dst")
     groups = {r["gid"]: (r["n_docs"], r["gmax"]) for r in grp.collect()}
     # {a..j} docs 1,2,3,9 condense into ONE group keyed gid=1.
     assert groups[1] == (4, 9)
@@ -548,15 +554,18 @@ def test_cc_query_equals_propagation_on_fixture(spark, sf_dir):
     the routing swap can never silently change results."""
     from taps_spark.operators.dedup import connected_components
     from taps_spark.queries.dedup import (
-        _condensed_group_graph_cached,
         _condensed_rollup,
+        _lsh_prelude,
+        _verified_scores,
         dedup_connected_components,
     )
 
     registered = sorted(
         map(tuple, dedup_connected_components(spark, sf_dir).collect())
     )
-    grp, gedges = _condensed_group_graph_cached(spark, sf_dir)
+    prelude = _lsh_prelude(spark, sf_dir)
+    grp = prelude[0]
+    gedges = _verified_scores(prelude, 0.9).filter("j >= 0.9").select("src", "dst")
     baseline = sorted(
         map(tuple, _condensed_rollup(grp, connected_components(gedges)).collect())
     )
@@ -1921,6 +1930,18 @@ def test_kcore_matches_pure_python_peel(spark, any_sf_dir):
         assert got[k] == (len(nodes), len(es)), (k, got[k], len(nodes), len(es))
     assert got[4][0] <= got[3][0] <= got[2][0]
     assert got[4][1] <= got[3][1] <= got[2][1]
+
+
+def test_kcore_raises_at_round_cap(spark, sf_dir, monkeypatch):
+    """A 121-node path peels only its two ends per round, so its empty
+    2-core takes 60 rounds to reach — past the 50-round cap. Hitting
+    the cap must raise, not report the half-peeled path as the core."""
+    import taps_spark.queries.graph as graph_queries
+
+    path = spark.createDataFrame([(i, i + 1) for i in range(120)], "u long, v long")
+    monkeypatch.setattr(graph_queries, "_copurchase_edges", lambda *_: path)
+    with pytest.raises(RuntimeError, match="not converged"):
+        graph_queries.graph_kcore(spark, sf_dir).collect()
 
 
 def test_kendall_tau_matches_numpy_brute_force(spark, sf_dir):

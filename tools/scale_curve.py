@@ -5,10 +5,8 @@ grows linearly with data; alpha ~2 is a quadratic scale-killer.
 
 Methodology: one warm-up query first (JVM/codegen warm-up otherwise
 lands on the first timed query, ~40% inflation — see time_profile
-notes), then each query timed cold w.r.t. the process-wide LSH memos
-(_PRELUDE_CACHE cleared per query) so shared stages are charged to
-every query, not just the first. Full execution forced by hashing all
-output columns (count() lets Catalyst prune aggregate expressions).
+notes), then each query timed once. Full execution forced by hashing
+all output columns (count() lets Catalyst prune aggregate expressions).
 
 Usage: python tools/scale_curve.py small_dir big_dir ratio out.json --only a,b,c
 """
@@ -74,16 +72,13 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     from taps_spark.queries import all_queries
-    from taps_spark.queries import dedup as dq
 
     qs = all_queries()
     times: dict[str, dict[str, float]] = {n: {} for n in names}
     for label, sf_dir in (("small", small), ("big", big)):
         # warm-up: cheapest LSH family member, result discarded
-        dq._PRELUDE_CACHE.clear()
         _force(qs["dedup_minhash_lsh"](spark, sf_dir))
         for n in names:
-            dq._PRELUDE_CACHE.clear()
             t0 = time.time()
             _force(qs[n](spark, sf_dir))
             times[n][label] = round(time.time() - t0, 3)
