@@ -57,6 +57,8 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from taps_spark.session import STATIC_CONFS
+
     spark = (
         SparkSession.builder.master("local[16]")
         .config("spark.sql.shuffle.partitions", "16")
@@ -67,6 +69,7 @@ def main() -> int:
         # binds the correctness harness, not offline tooling.
         .config("spark.driver.memory", "48g")
         .appName("scale_curve")
+        .config(map=STATIC_CONFS)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -1,7 +1,9 @@
 """Per-query wall-time profile at a given SF — the optimization
 target finder. Runs every registered query once (warm session),
 counts the result (full execution, no display collect), and writes
-one JSON file sorted slowest-first.
+one JSON file sorted slowest-first, with each query's count of
+generated classes compiled (`codegen_compiles`: misses of the
+compiled-class cache, an exact delta of Spark's compile counter).
 
 Usage: python tools/time_profile.py [sf_dir] [out.json] [--only a,b]
 """
@@ -28,6 +30,8 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
+    from taps_spark.session import STATIC_CONFS, codegen_compiles
+
     def fresh_session():
         active = SparkSession.getActiveSession()
         if active is not None:
@@ -51,6 +55,7 @@ def main() -> int:
             # harness, not this profiler.
             .config("spark.driver.memory", "8g")
             .appName("time_profile")
+            .config(map=STATIC_CONFS)
             .getOrCreate()
         )
         s.sparkContext.setLogLevel("ERROR")
@@ -74,6 +79,7 @@ def main() -> int:
         qs = {n: f for n, f in qs.items() if n in only}
 
     times: dict[str, float] = {}
+    compiles: dict[str, int] = {}
     errors: dict[str, str] = {}
     jsonl = out_path + ".jsonl"  # incremental log: survives a killed run
     n_since_restart = 0
@@ -86,6 +92,7 @@ def main() -> int:
                 spark = fresh_session()
                 n_since_restart = 0
             n_since_restart += 1
+            c0 = codegen_compiles(spark)
             t0 = time.time()
             try:
                 df = fn(spark, sf_dir)
@@ -102,7 +109,10 @@ def main() -> int:
                     ).alias("h")
                 ).collect()
                 times[name] = round(time.time() - t0, 3)
-                log.write(json.dumps({"q": name, "sec": times[name]}) + "\n")
+                compiles[name] = codegen_compiles(spark) - c0
+                log.write(
+                    json.dumps({"q": name, "sec": times[name], "codegen_compiles": compiles[name]}) + "\n"
+                )
             except Exception as e:  # noqa: BLE001 — profile must survive one bad query
                 errors[name] = f"{type(e).__name__}: {e}"[:200]
                 log.write(json.dumps({"q": name, "error": errors[name]}) + "\n")
@@ -113,6 +123,7 @@ def main() -> int:
         "n_queries": len(times),
         "total_seconds": round(sum(times.values()), 1),
         "slowest": ranked,
+        "codegen_compiles": {name: compiles[name] for name in ranked},
         "errors": errors,
     }
     with open(out_path, "w") as f:
