@@ -168,37 +168,30 @@ _CATALOG_SQL = {
 
 def list_jdbc_tables(spark: SparkSession, url: str) -> list[str]:
     """Table discovery from the live catalog (reference #1,
-    lib/taps/server.rb:142-158 fetches the schema's table list)."""
+    lib/taps/server.rb:142-158 fetches the schema's table list), over
+    one driver-side connection: no Spark job."""
     sql = _CATALOG_SQL.get(jdbc_dialect(url))
     if sql is None:
         raise ValueError(f"no catalog query for dialect {jdbc_dialect(url)!r}")
-    df = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", f"({sql}) cat")
-        .load()
-    )
-    return sorted(r[0].lower() for r in df.collect())
+    return sorted(r[0].lower() for r in query_jdbc_rows(spark, url, sql))
 
 
 def fetch_table_stats(spark: SparkSession, url: str, table: str, pk: str | None) -> TableStats:
-    """One aggregate pushdown per table — the Spark analog of the
-    reference's table_count + max(pk) round trips
-    (lib/taps/server.rb:160-169, lib/taps/data_stream.rb:329-340)."""
-    d = jdbc_dialect(url)
+    """One aggregate query per table — the reference's table_count +
+    max(pk) round trips (lib/taps/server.rb:160-169,
+    lib/taps/data_stream.rb:329-340) in one statement, run over a
+    driver-side connection: the answer is one row, so a Spark job
+    would be all overhead."""
     if pk is None:
-        q = f'(SELECT COUNT(*) AS "n" FROM {table}) s'
-        row = spark.read.format("jdbc").option("url", url).option("dbtable", q).load().head()
-        return TableStats(n_rows=int(row["n"]))
-    pkq = quote_ident(pk, d)
-    q = (
-        f'(SELECT COUNT(*) AS "n", MIN({pkq}) AS "lo", MAX({pkq}) AS "hi" '
-        f"FROM {table}) s"
+        ((n,),) = query_jdbc_rows(spark, url, f"SELECT COUNT(*) FROM {table}")
+        return TableStats(n_rows=int(n))
+    pkq = quote_ident(pk, jdbc_dialect(url))
+    ((n, lo, hi),) = query_jdbc_rows(
+        spark, url, f"SELECT COUNT(*), MIN({pkq}), MAX({pkq}) FROM {table}"
     )
-    row = spark.read.format("jdbc").option("url", url).option("dbtable", q).load().head()
-    if row["lo"] is None:  # empty table
+    if lo is None:  # empty table
         return TableStats(n_rows=0, pk=pk)
-    return TableStats(n_rows=int(row["n"]), pk=pk, pk_min=int(row["lo"]), pk_max=int(row["hi"]))
+    return TableStats(n_rows=int(n), pk=pk, pk_min=int(lo), pk_max=int(hi))
 
 
 def execute_jdbc_sql(spark: SparkSession, url: str, *statements: str) -> None:
@@ -220,16 +213,18 @@ def execute_jdbc_sql(spark: SparkSession, url: str, *statements: str) -> None:
         conn.close()
 
 
-def query_jdbc_single_column(spark: SparkSession, url: str, sql: str) -> list:
-    """Run a scalar/one-column query over a real JDBC connection
-    (catalog probes in tests; not a data-plane path)."""
+def query_jdbc_rows(spark: SparkSession, url: str, sql: str) -> list[tuple]:
+    """Run a query over one real JDBC connection on the driver and
+    return its rows as tuples: for metadata and small aggregates
+    (catalog, table stats), not a data-plane path."""
     jvm = spark._jvm
     conn = jvm.java.sql.DriverManager.getConnection(url)
     try:
         rs = conn.createStatement().executeQuery(sql)
+        cols = range(1, rs.getMetaData().getColumnCount() + 1)
         out = []
         while rs.next():
-            out.append(rs.getObject(1))
+            out.append(tuple(rs.getObject(i) for i in cols))
         return out
     finally:
         conn.close()

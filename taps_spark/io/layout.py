@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from taps_spark.io.sources import read_parquet
+
 
 def write_clustered(
     df: DataFrame,
@@ -180,7 +182,7 @@ def compact_small_files(
     ]
     total = sum(os.path.getsize(f) for f in files)
     n_out = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     if cluster_cols:
         out = df.repartitionByRange(n_out, *cluster_cols).sortWithinPartitions(
             *cluster_cols

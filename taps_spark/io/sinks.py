@@ -19,6 +19,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from taps_spark.io.sources import read_parquet
 from taps_spark.transfer.progress import ProgressMeter
 
 
@@ -37,7 +38,7 @@ def _read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
     fs, p = _fs_path(spark, path)
     if not fs.exists(p):
         return None
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def write_parquet(

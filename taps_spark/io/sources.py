@@ -7,19 +7,128 @@ Rules that matter at 100 TB:
   extra full scan; pass or persist the schema (io/schema.py).
 - Parquet is the engine's interchange format (pushdown + pruning);
   CSV/JSON exist for ingest/egress at the edges.
+- `read_parquet` is the engine's one parquet read. Parquet is
+  self-describing, so its schema is metadata, the way the reference
+  asks the database for `db.schema(table)` instead of scanning rows.
+  Spark's own inference reads exactly one footer too, but it does so
+  inside a one-task Spark job per read; `read_parquet` reads that same
+  footer on the driver and hands Spark the schema, so a table read
+  launches no job. At 100 TB the driver still reads one footer of a few
+  KB; only the one-task job around it is gone.
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from taps_spark.session import tune
 
+#: Characters that make Spark expand a path as a glob
+#: (SparkHadoopUtil.isGlobPath).
+_GLOB_CHARS = frozenset("{}[]*?\\")
+#: Parquet summary files, preferred over part files in this order.
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Read a parquet file or directory with its schema taken from one
+    footer, read on the driver: no schema-inference Spark job.
+
+    The footer is the one Spark's non-merging inference reads:
+    `_common_metadata`, else `_metadata`, else the first data file in
+    path order, descending into partition directories and skipping the
+    names Spark's listing hides. Like Spark, this assumes the part files
+    agree. The conversion is Spark's own (`readSchemaFromFooter` with a
+    `ParquetToSparkSchemaConverter` over the session conf), so the
+    session's nanosAsLong, timestamp-NTZ and binary-as-string settings
+    apply exactly as under inference. A mapping of our own (from
+    pyarrow, say) would drift from Spark's on those settings and on the
+    Spark schema that Spark-written files carry in their metadata.
+
+    Passed to `spark.read.parquet(path)` unchanged, so Spark raises its
+    own error or merges: a missing path, a directory with no data file,
+    a glob, and any read while the session sets
+    `spark.sql.parquet.mergeSchema=true`. A corrupt footer raises.
+    """
     tune(spark)
-    return spark.read.parquet(path)
+    schema = _footer_schema(spark, path)
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(schema).parquet(path)
+
+
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """Spark's schema for `path` from one footer, or None when Spark
+    must resolve the read itself."""
+    state = spark._jsparkSession.sessionState()
+    conf = state.conf()
+    if conf.isParquetSchemaMergingEnabled() or _GLOB_CHARS.intersection(path):
+        return None
+    jvm = spark._jvm
+    hadoop_conf = state.newHadoopConf()
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(hadoop_conf)
+    if not fs.exists(root):
+        return None
+    status = _footer_file(fs, fs.getFileStatus(root))
+    if status is None:
+        return None
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    metadata = parquet.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, hadoop_conf),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    footer = jvm.org.apache.parquet.hadoop.Footer(status.getPath(), metadata)
+    schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+        footer, parquet.ParquetToSparkSchemaConverter(conf)
+    )
+    return T.StructType.fromJson(json.loads(schema.json()))
+
+
+def _listed(name: str) -> bool:
+    """Whether Spark's file listing keeps `name`
+    (HadoopFSUtils.shouldFilterOutPathName)."""
+    hidden = (name.startswith("_") and "=" not in name) or name.startswith(".")
+    return name.startswith(_SUMMARY_FILES) or not (hidden or name.endswith("._COPYING_"))
+
+
+def _footer_file(fs, status):
+    """FileStatus of the footer Spark's non-merging inference reads for
+    `status`, or None for a directory without a data file. Summary
+    files are looked for at the root, where writers put them."""
+    if not status.isDirectory():
+        return status
+    children = _children(fs, status.getPath())
+    for name in _SUMMARY_FILES:
+        if name in children:
+            return children[name]
+    return _first_data_file(fs, children)
+
+
+def _first_data_file(fs, children: dict):
+    """The data file with the smallest full path under a directory's
+    `children` (name → FileStatus), the one Spark lists first. A
+    directory sorts as its name plus "/", so comparing names compares
+    the full paths beneath them."""
+    entries = []
+    for name, status in children.items():
+        if _listed(name) and name not in _SUMMARY_FILES:
+            is_dir = status.isDirectory()
+            entries.append((name + "/" if is_dir else name, is_dir, status))
+    for _, is_dir, status in sorted(entries, key=lambda e: e[0]):
+        if not is_dir:
+            return status
+        found = _first_data_file(fs, _children(fs, status.getPath()))
+        if found is not None:
+            return found
+    return None
+
+
+def _children(fs, path) -> dict:
+    return {c.getPath().getName(): c for c in fs.listStatus(path)}
 
 
 def read_parquet_evolved(spark: SparkSession, *paths: str) -> DataFrame:

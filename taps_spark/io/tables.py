@@ -17,7 +17,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from taps_spark.session import tune
+from taps_spark.io.sources import read_parquet
 
 #: The full fixture catalog (TESTDATA.md).
 TABLE_NAMES: tuple[str, ...] = (
@@ -41,8 +41,7 @@ def table_path(sf_dir: str, name: str) -> str:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         # events.ts is parquet TIMESTAMP(NANOS) — illegal for Spark's
         # reader; with spark.sql.legacy.parquet.nanosAsLong (session.py)

@@ -27,6 +27,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from taps_spark.io.sources import read_parquet
+
 _MANIFEST = "_versions.json"
 
 
@@ -76,7 +78,7 @@ def read_version(
     v = version if version is not None else m["current"]
     if v is None or v not in m["versions"]:
         raise FileNotFoundError(f"no version {v!r} at {table_path}")
-    return spark.read.parquet(os.path.join(table_path, f"v={v}"))
+    return read_parquet(spark, os.path.join(table_path, f"v={v}"))
 
 
 def rollback(table_path: str, version: int) -> None:

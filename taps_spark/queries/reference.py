@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from taps_spark.catalog import apply_table_filter, compile_table_pattern, discover_tables, table_counts
+from taps_spark.io.sources import read_parquet
 from taps_spark.io.tables import load_tables
 from taps_spark.queries import query
 
@@ -680,7 +681,7 @@ def transfer_stream_pull(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.stop()
     q.awaitTermination()
     return (
-        spark.read.parquet(out)
+        read_parquet(spark, out)
         .select(
             "o_orderkey",
             "o_custkey",

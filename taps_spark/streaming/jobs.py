@@ -23,12 +23,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from taps_spark.io.sources import read_parquet
 from taps_spark.io.tables import table_path
 from taps_spark.session import tune
 
 _SINK_IDS = itertools.count()
 _STREAM_DIRS: dict[str, str] = {}
-_STREAM_SCHEMAS: dict[str, T.StructType] = {}
 
 
 def _as_stream_dir(sf_dir: str) -> str:
@@ -67,15 +67,15 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # requires a directory. Expose it through a (cached) temp dir of
     # symlinks — zero copy, and exactly how a production landing zone
     # looks: a directory where files arrive.
-    # Schema from a driver-side batch probe, NOT hardcoded: fixtures
-    # have shipped ts as both TIMESTAMP(NANOS) (arrives as LongType
-    # under nanosAsLong) and TIMESTAMP(MICROS) (arrives as NTZ).
+    # Schema from the file's footer on every call, NOT hardcoded or
+    # memoized: fixtures have shipped ts as both TIMESTAMP(NANOS)
+    # (arrives as LongType under nanosAsLong) and TIMESTAMP(MICROS)
+    # (arrives as NTZ), and a file rewritten in place may switch units.
     # Assuming one unit silently rescales event time by 1000× under
     # the other, so normalize by what the file actually contains —
     # the same adaptive rule as the batch loader (io/tables.py).
-    if sf_dir not in _STREAM_SCHEMAS:
-        _STREAM_SCHEMAS[sf_dir] = spark.read.parquet(table_path(sf_dir, "events")).schema
-    raw = spark.readStream.schema(_STREAM_SCHEMAS[sf_dir]).parquet(_as_stream_dir(sf_dir))
+    schema = read_parquet(spark, table_path(sf_dir, "events")).schema
+    raw = spark.readStream.schema(schema).parquet(_as_stream_dir(sf_dir))
     ts_type = raw.schema["ts"].dataType
     if isinstance(ts_type, T.LongType):
         ts = F.timestamp_micros(F.expr("ts div 1000"))
@@ -285,7 +285,7 @@ def stream_foreach_batch_idempotent(spark: SparkSession, sf_dir: str) -> DataFra
                 .start()
             )
             q.awaitTermination()
-    return spark.read.parquet(target)
+    return read_parquet(spark, target)
 
 
 def stream_session_window_agg(
@@ -427,7 +427,7 @@ def stream_continuous_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "file source listed zero files (empty or mis-shaped source "
             f"dir for {sf_dir!r}); refusing to return an empty rollup"
         )
-    materialized = spark.read.parquet(target)
+    materialized = read_parquet(spark, target)
     return materialized.groupBy(
         F.date_format(F.date_trunc("day", "hour_start"), "yyyy-MM-dd").alias("day"),
         F.col("event_type"),

@@ -46,6 +46,7 @@ from taps_spark.catalog import apply_table_filter
 from taps_spark.errors import CorruptedData
 from taps_spark.io import sinks
 from taps_spark.io.jdbc import create_index_sql, reset_sequence_sql
+from taps_spark.io.sources import read_parquet
 from taps_spark.transfer.manifest import TransferManifest
 from taps_spark.transfer.verify import verify_or_raise
 from taps_spark.validation import Rule, enforce
@@ -83,7 +84,7 @@ class ParquetEndpoint:
         return os.path.join(self.root, f"{table}.parquet")
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
-        return spark.read.parquet(self._path(table))
+        return read_parquet(spark, self._path(table))
 
     def write(
         self, spark: SparkSession, table: str, df: DataFrame, key_cols: list[str] | None

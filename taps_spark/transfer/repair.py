@@ -31,6 +31,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from taps_spark.io.sources import read_parquet
+
 
 def _chunk_digest(df: DataFrame, pk: str, chunk_rows: int) -> DataFrame:
     """Per-chunk fingerprint: (chunk_id, n_rows, xor_hash, sum_hash)
@@ -115,7 +117,7 @@ def repair_missing_rows(
     transfer).
     """
     spark = spark or source.sparkSession
-    dest = spark.read.parquet(dest_path)
+    dest = read_parquet(spark, dest_path)
     damaged = audit_chunks(source, dest, pk, chunk_rows).select("chunk_id")
     src_chunk = F.expr(f"{pk} DIV {chunk_rows}").alias("chunk_id")
     candidates = source.withColumn("chunk_id", src_chunk).join(

@@ -52,3 +52,25 @@ def test_query_leaves_cache_manager_empty(spark, sf_dir, name):
     spark.catalog.clearCache()
     REGISTRY[name].fn(spark, sf_dir).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_stream_query_rereads_schema_rewritten_in_place(spark, sf_dir, tmp_path):
+    """Rewrite events.parquet in place with ts stored as TIMESTAMP(NANOS)
+    instead of MICROS and rerun a streaming query in the same session:
+    the stream takes its schema from the file as it is now, so the
+    answer is unchanged."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    events = tmp_path / "events.parquet"
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), events)
+    table = pq.read_table(str(events))
+    assert table.schema.field("ts").type == pa.timestamp("us")
+    first = _result_hash(spark, "events_stream_tumbling", str(tmp_path))
+
+    ts = table.schema.get_field_index("ts")
+    nanos = table.set_column(ts, "ts", table.column("ts").cast(pa.timestamp("ns")))
+    pq.write_table(nanos, str(events))
+    stored = pq.ParquetFile(str(events)).schema.column(ts).logical_type
+    assert "nanoseconds" in str(stored)
+    assert _result_hash(spark, "events_stream_tumbling", str(tmp_path)) == first

@@ -19,7 +19,7 @@ from taps_spark.io.jdbc import (
     jdbc_dialect,
     list_jdbc_tables,
     plan_jdbc_scan,
-    query_jdbc_single_column,
+    query_jdbc_rows,
     read_jdbc,
 )
 from taps_spark.io.tables import load_table
@@ -67,6 +67,39 @@ def test_stats_and_partitioned_read_live(spark, sf_dir, seeded):
     assert sorted(df.select("n_nationkey", "n_name").collect()) == sorted(
         src.select("n_nationkey", "n_name").collect()
     )
+
+
+def _spark_jdbc_row(spark, url: str, sql: str):
+    return spark.read.format("jdbc").option("url", url).option(
+        "dbtable", f"({sql}) q"
+    ).load().head()
+
+
+def test_jdbc_metadata_runs_no_spark_job(spark, seeded):
+    """Catalog listing and table stats are one-row answers read over a
+    driver-side connection: no Spark job, and the values a Spark JDBC
+    read of the same aggregates returns, the empty table included."""
+    execute_jdbc_sql(spark, seeded, 'CREATE TABLE stats_empty ("id" BIGINT)')
+    try:
+        dag = spark.sparkContext._jsc.sc().dagScheduler()
+        j = dag.nextJobId()
+        tables = list_jdbc_tables(spark, seeded)
+        keyed = fetch_table_stats(spark, seeded, "nation", "n_nationkey")
+        unkeyed = fetch_table_stats(spark, seeded, "region", None)
+        empty = fetch_table_stats(spark, seeded, "stats_empty", "id")
+        assert dag.nextJobId() - j == 0
+
+        assert tables == ["nation", "region", "stats_empty"]
+        want = _spark_jdbc_row(
+            spark, seeded,
+            'SELECT COUNT(*) AS n, MIN("n_nationkey") AS lo, MAX("n_nationkey") AS hi FROM nation',
+        )
+        assert (keyed.n_rows, keyed.pk_min, keyed.pk_max) == tuple(want)
+        want = _spark_jdbc_row(spark, seeded, "SELECT COUNT(*) AS n FROM region")
+        assert (unkeyed.n_rows, unkeyed.pk) == (want[0], None)
+        assert (empty.n_rows, empty.pk, empty.pk_min, empty.pk_max) == (0, "id", None, None)
+    finally:
+        execute_jdbc_sql(spark, seeded, "DROP TABLE stats_empty")
 
 
 def test_pull_from_live_database_and_verify(spark, seeded, tmp_path):
@@ -132,7 +165,7 @@ def test_index_and_sequence_phases_execute_on_live_db(spark, seeded, tmp_path):
     assert r.phases == ["schema", "data", "indexes"]
     assert len(r.ddl_applied) == 2
     # The indexes exist in Derby's catalog.
-    idx = query_jdbc_single_column(
+    idx = query_jdbc_rows(
         spark, seeded,
         "SELECT CONGLOMERATENAME FROM SYS.SYSCONGLOMERATES "
         "WHERE CONGLOMERATENAME LIKE 'IDX_IDXNATION%'",
@@ -166,8 +199,8 @@ def test_sequence_restart_live(spark, seeded):
         "ALTER TABLE seqdemo ALTER COLUMN id RESTART WITH 51",
         "INSERT INTO seqdemo (name) VALUES ('auto')",
     )
-    ids = query_jdbc_single_column(spark, seeded, "SELECT id FROM seqdemo ORDER BY id")
-    assert [int(i) for i in ids] == [50, 51]
+    ids = query_jdbc_rows(spark, seeded, "SELECT id FROM seqdemo ORDER BY id")
+    assert [int(i) for (i,) in ids] == [50, 51]
 
 
 class _FailAfterFirstChunk:
@@ -376,7 +409,7 @@ def test_cli_schema_console(spark, seeded, tmp_path, capsys):
     index DDL for declared keys, load applies a DDL file, and
     reset_db_sequences restarts identities — all against live Derby."""
     from taps_spark.cli import main as cli_main
-    from taps_spark.io.jdbc import query_jdbc_single_column
+    from taps_spark.io.jdbc import query_jdbc_rows
 
     rc = cli_main(["schema", "dump", seeded])
     assert rc == 0
@@ -398,8 +431,8 @@ def test_cli_schema_console(spark, seeded, tmp_path, capsys):
     rc = cli_main(["schema", "load", seeded, str(ddl_file)])
     assert rc == 0
     assert "applied 1 statements" in capsys.readouterr().out
-    names = query_jdbc_single_column(
+    names = query_jdbc_rows(
         spark, seeded,
         "SELECT tablename FROM SYS.SYSTABLES WHERE tablename = 'SCHEMA_CLI_T'",
     )
-    assert names == ["SCHEMA_CLI_T"]
+    assert names == [("SCHEMA_CLI_T",)]
