@@ -109,15 +109,23 @@ def _touched_since_seal() -> set[str]:
     """Queries whose implementing files changed since the previous
     seal, from the committed TOUCHED_QUERIES.json artifact (generated
     by tools/touched_queries.py at seal time — the driver environment
-    has no git, so the list ships as data). Missing or malformed file
-    → empty set: the tier degrades to a no-op, never an error."""
+    has no git, so the list ships as data). A name leaves the tier once
+    it has a green row from a round newer than the file's `round` (the
+    newest driver round at seal time); a file without `round` keeps
+    every name. Missing or malformed file → empty set: the tier
+    degrades to a no-op, never an error."""
     here = os.path.dirname(os.path.abspath(__file__))
     try:
         with open(os.path.join(here, "TOUCHED_QUERIES.json")) as f:
             data = json.load(f)
-        return {n for n in data.get("queries", []) if isinstance(n, str)}
+        names = {n for n in data.get("queries", []) if isinstance(n, str)}
+        seal = data.get("round")
     except (OSError, json.JSONDecodeError, AttributeError):
         return set()
+    if isinstance(seal, int):
+        last = _last_green_round()
+        names = {n for n in names if last.get(n, 0) <= seal}
+    return names
 
 
 def _rotated(names: list[str]) -> list[str]:

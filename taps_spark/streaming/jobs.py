@@ -153,9 +153,13 @@ def run_to_memory(
     data and return the materialized result (local harness path).
     `state_partitions` overrides the JVM-stateful default — the
     applyInPandasWithState operators pass
-    STREAM_PYTHON_STATE_PARTITIONS (see the constants above)."""
+    STREAM_PYTHON_STATE_PARTITIONS (see the constants above).
+
+    The sink's temp view is dropped once the returned frame has
+    resolved it: the frame keeps the rows, the session catalog does not."""
+    spark = stream_df.sparkSession
     name = f"taps_stream_sink_{next(_SINK_IDS)}"
-    with _state_partitions(stream_df.sparkSession, state_partitions):
+    with _state_partitions(spark, state_partitions):
         q = (
             stream_df.writeStream.outputMode(output_mode)
             .format("memory")
@@ -164,7 +168,9 @@ def run_to_memory(
             .start()
         )
         q.awaitTermination()
-    return stream_df.sparkSession.table(name)
+    result = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return result
 
 
 def stream_tumbling_agg(

@@ -141,25 +141,6 @@ TTL_TWIN_STATE_SCHEMA = "days array<int>, ns array<bigint>, vs array<bigint>, se
 #: the event-time TTL clock of the twin (see stream_state_ttl_twin).
 TTL_DAYS = 2
 
-_TWIN_SRC_DIRS: dict[tuple[str, str], str] = {}
-
-#: Every mkdtemp split dir ever created, removed at interpreter exit —
-#: the memo itself only deletes dirs it evicts (stale applicationId).
-_TWIN_DIR_CLEANUP: set[str] = set()
-
-
-def _cleanup_twin_dirs() -> None:
-    import shutil
-
-    for d in _TWIN_DIR_CLEANUP:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-import atexit as _atexit
-
-_atexit.register(_cleanup_twin_dirs)
-
-
 def _ttl_twin_update(
     key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
@@ -256,20 +237,15 @@ def stream_state_ttl_twin(
 
     from taps_spark.io.tables import load_table
 
-    import os
+    import shutil
+    import tempfile
 
-    cache_key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if cache_key not in _TWIN_SRC_DIRS:
-        import shutil
-        import tempfile
+    from taps_spark.streaming.jobs import STREAM_PYTHON_STATE_PARTITIONS
 
-        # Evict (and delete on disk) split dirs from any OTHER
-        # applicationId: a stopped context never reads them again, and
-        # un-evicted mkdtemp dirs leak per session (r8 ADVICE).
-        for k in [k for k in _TWIN_SRC_DIRS if k[0] != cache_key[0]]:
-            shutil.rmtree(_TWIN_SRC_DIRS.pop(k), ignore_errors=True)
-        d = tempfile.mkdtemp(prefix="taps_ttl_twin_")
-        _TWIN_DIR_CLEANUP.add(d)
+    # A fresh split per call: the input is re-read every time, and the
+    # split is removed once the stream has drained it into memory.
+    src = tempfile.mkdtemp(prefix="taps_ttl_twin_")
+    try:
         ev = load_table(spark, sf_dir, "events").select(
             "user_id",
             F.datediff(F.to_date("ts"), F.lit("1970-01-01").cast("date")).alias(
@@ -280,27 +256,24 @@ def stream_state_ttl_twin(
             .alias("q"),
             (F.col("event_id") % n_files).alias("_b"),
         )
-        ev.repartition(n_files, "_b").drop("_b").write.mode("overwrite").parquet(d)
-        _TWIN_SRC_DIRS[cache_key] = d
-    src = _TWIN_SRC_DIRS[cache_key]
-
-    raw = (
-        spark.readStream.schema("user_id bigint, day int, q bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    updates = raw.groupBy("user_id").applyInPandasWithState(
-        _ttl_twin_update,
-        outputStructType=TTL_TWIN_OUTPUT_SCHEMA,
-        stateStructType=TTL_TWIN_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    from taps_spark.streaming.jobs import STREAM_PYTHON_STATE_PARTITIONS
-
-    tbl = run_to_memory(
-        updates, "update", state_partitions=STREAM_PYTHON_STATE_PARTITIONS
-    )
+        ev.repartition(n_files, "_b").drop("_b").write.mode("overwrite").parquet(src)
+        raw = (
+            spark.readStream.schema("user_id bigint, day int, q bigint")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        updates = raw.groupBy("user_id").applyInPandasWithState(
+            _ttl_twin_update,
+            outputStructType=TTL_TWIN_OUTPUT_SCHEMA,
+            stateStructType=TTL_TWIN_STATE_SCHEMA,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        tbl = run_to_memory(
+            updates, "update", state_partitions=STREAM_PYTHON_STATE_PARTITIONS
+        )
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
     w = Window.partitionBy("user_id")
     return (
         tbl.withColumn("_m", F.max("seq").over(w))

@@ -21,37 +21,54 @@ def _result_hash(spark, name: str, sf_dir: str) -> str:
     return hashlib.md5(json.dumps(norm).encode()).hexdigest()
 
 
-def test_lsh_query_rereads_input_rewritten_in_place(spark, sf_dir, tmp_path):
-    """Rewrite documents.parquet in place (first row dropped) and rerun
-    in the same session: the answer must equal a fresh copy's, not the
-    first run's."""
+@pytest.mark.parametrize(
+    "name,table",
+    [
+        ("dedup_lsh_verified_pairs", "documents.parquet"),
+        ("events_stream_state_ttl_twin", "events.parquet"),
+    ],
+)
+def test_lsh_query_rereads_input_rewritten_in_place(spark, sf_dir, tmp_path, name, table):
+    """Rewrite the query's input in place (first row dropped, or half
+    the rows for the events stream) and rerun in the same session: the
+    answer must equal a fresh copy's, not the first run's."""
     import pyarrow.parquet as pq
 
     live = tmp_path / "live"
     live.mkdir()
-    docs = live / "documents.parquet"
-    shutil.copy(os.path.join(sf_dir, "documents.parquet"), docs)
-    first = _result_hash(spark, "dedup_lsh_verified_pairs", str(live))
+    src = live / table
+    shutil.copy(os.path.join(sf_dir, table), src)
+    first = _result_hash(spark, name, str(live))
 
-    pq.write_table(pq.read_table(str(docs)).slice(1), str(docs))
-    second = _result_hash(spark, "dedup_lsh_verified_pairs", str(live))
+    t = pq.read_table(str(src))
+    kept = t.slice(1) if table == "documents.parquet" else t.slice(0, t.num_rows // 2)
+    pq.write_table(kept, str(src))
+    second = _result_hash(spark, name, str(live))
 
     fresh = tmp_path / "fresh"
     shutil.copytree(live, fresh)
-    assert second == _result_hash(spark, "dedup_lsh_verified_pairs", str(fresh))
-    # The dropped document belongs to a duplicate group, so the rewrite
-    # must change the answer; otherwise this test proves nothing.
+    assert second == _result_hash(spark, name, str(fresh))
+    # The dropped rows change the answer; otherwise this test proves
+    # nothing.
     assert second != first
 
 
 @pytest.mark.parametrize(
-    "name", ["similarity_ann_ivf", "similarity_ivf_recall_sweep", "similarity_ann_pq"]
+    "name",
+    [
+        "similarity_ann_ivf",
+        "similarity_ivf_recall_sweep",
+        "similarity_ann_pq",
+        "events_stream_tumbling",
+    ],
 )
 def test_query_leaves_cache_manager_empty(spark, sf_dir, name):
     _load()
     spark.catalog.clearCache()
     REGISTRY[name].fn(spark, sf_dir).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    # A stream query's memory sink leaves no view in the session catalog.
+    assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("taps_stream_sink_")]
 
 
 def test_stream_query_rereads_schema_rewritten_in_place(spark, sf_dir, tmp_path):

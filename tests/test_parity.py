@@ -1,45 +1,22 @@
 """Oracle-parity tests: run EVERY registered query against its DuckDB
 oracle at sf0.001 and require exact row-set equality — a faithful
 local mirror of the driver's CORRECTNESS gate (row count + schema +
-order-insensitive values), so hash mismatches surface here first.
+order-insensitive values, compared dtype-strictly like the driver's
+value hash), so hash mismatches surface here first.
 """
 
 from __future__ import annotations
 
-import math
-
-import pandas as pd
 import pytest
 
 from bench import force
 from taps_spark.queries import REGISTRY, _load
+from tools.measure import _norm
 
 _load()
 
 PARITY_CASES = sorted(name for name, rq in REGISTRY.items() if rq.oracle is not None)
 ROWS_ONLY_CASES = sorted(name for name, rq in REGISTRY.items() if rq.oracle is None)
-
-
-def _normalize(rows):
-    """Rows → sorted list of tuples with floats rounded to a stable
-    repr (the driver hashes exact values; we compare exactly but give
-    clear diffs)."""
-    out = []
-    for row in rows:
-        vals = []
-        for v in row:
-            try:
-                if v is None or pd.isna(v):
-                    vals.append("NULL")
-                    continue
-            except (TypeError, ValueError):
-                pass
-            if isinstance(v, float) and math.isnan(v):
-                vals.append("NULL")
-            else:
-                vals.append(v)
-        out.append(tuple(vals))
-    return sorted(out, key=lambda t: tuple(str(x) for x in t))
 
 
 @pytest.mark.parametrize("name", PARITY_CASES)
@@ -57,8 +34,8 @@ def test_query_matches_oracle(spark, oracle, sf_dir, name):
     )
 
     cols = sorted(spark_pdf.columns)
-    s_rows = _normalize(spark_pdf[cols].itertuples(index=False, name=None))
-    d_rows = _normalize(duck[cols].itertuples(index=False, name=None))
+    s_rows = _norm(spark_pdf[cols].itertuples(index=False, name=None))
+    d_rows = _norm(duck[cols].itertuples(index=False, name=None))
 
     assert len(s_rows) == len(d_rows), f"{name}: row count {len(s_rows)} != {len(d_rows)}"
     mismatches = [(a, b) for a, b in zip(s_rows, d_rows) if a != b]

@@ -1,5 +1,5 @@
 """Tests for the builder-side gate tooling — above all the dtype-STRICT
-value compare in tools/local_correctness.py.
+value compare in tools/measure.py.
 
 Round-5 post-mortem: `pipeline_mix_apply`'s oracle shipped an uncast
 DuckDB HUGEINT-sum (surfacing as float64 `1435.0`) against Spark's
@@ -21,7 +21,7 @@ import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.local_correctness import _norm  # noqa: E402
+from tools.measure import _norm  # noqa: E402
 
 
 def test_norm_is_dtype_strict_int_vs_float():
@@ -90,6 +90,39 @@ def test_checker_catches_the_r5_mix_apply_oracle_bug(spark, oracle, sf_dir):
 
     assert _norm(fixed_df[cols].itertuples(index=False, name=None)) == spark_norm
     assert _norm(buggy_df[cols].itertuples(index=False, name=None)) != spark_norm
+
+
+def test_measure_sweep_records(spark, sf_dir):
+    """One sweep over an oracle query, a rows-only query and a query
+    given a planted wrong oracle (its real one cut to one row): every
+    record carries the same keys, counts its build jobs inside its
+    jobs, and the planted case FAILs."""
+    from taps_spark.queries import REGISTRY, _load
+    from tools.measure import sweep
+
+    _load()
+    names = ["agg_approx", "q1_pricing_summary", "q5_region_revenue"]
+    oracles = {
+        "q1_pricing_summary": f"SELECT * FROM ({REGISTRY['q1_pricing_summary'].oracle}) LIMIT 1",
+        "q5_region_revenue": REGISTRY["q5_region_revenue"].oracle,
+    }
+    results, session = sweep(spark, sf_dir, {n: REGISTRY[n].fn for n in names}, oracles)
+    assert session is spark
+    assert {n: r["status"] for n, r in results.items()} == {
+        "agg_approx": "rows_only", "q1_pricing_summary": "FAIL", "q5_region_revenue": "pass"
+    }
+    keys = {
+        "build_s", "action_s", "jobs", "build_jobs", "stages", "tasks",
+        "exec.shuffle_bytes", "exec.spill_bytes", "io.scan_bytes", "io.scan_s",
+        "python.bytes_sent", "python.bytes_returned", "python.worker_start_s",
+        "python.worker_init_s", "python.worker_run_s", "codegen_compiles", "rows", "status",
+    }
+    assert set(results["agg_approx"]) == keys
+    assert set(results["q1_pricing_summary"]) == set(results["q5_region_revenue"]) == keys | {"oracle_rows"}
+    for rec in results.values():
+        assert rec["jobs"] >= rec["build_jobs"] >= 0 and rec["jobs"] > 0
+        assert rec["rows"] > 0
+    assert results["q1_pricing_summary"]["oracle_rows"] == 1 < results["q1_pricing_summary"]["rows"]
 
 
 def test_bench_compare_min_fallback(tmp_path, monkeypatch, capsys):
@@ -184,16 +217,28 @@ def test_rotation_touched_tier(tmp_path, monkeypatch):
         json.dumps({"q_old": green, "q_touched": green})
     )
     (tmp_path / "CORRECTNESS_r2.json").write_text(
-        json.dumps({"q_fail": bad, "q_fresh": green})
+        json.dumps({"q_fail": bad, "q_fresh": green, "q_regated": green})
     )
+    touched = ["q_touched", "q_fail", "q_new", "q_regated"]
     (tmp_path / "TOUCHED_QUERIES.json").write_text(
-        json.dumps({"since": "abc", "queries": ["q_touched", "q_fail", "q_new"]})
+        json.dumps({"since": "abc", "round": 1, "queries": touched})
     )
     monkeypatch.setattr(e, "__file__", str(tmp_path / "__spark_entry__.py"))
-    order = e._rotated(["q_fresh", "q_old", "q_touched", "q_new", "q_fail"])
+    names = ["q_fresh", "q_old", "q_touched", "q_regated", "q_new", "q_fail"]
     # failed first, zero-evidence second (touched or not), touched
-    # third, then LRU (q_old round 1 before q_fresh round 2).
-    assert order == ["q_fail", "q_new", "q_touched", "q_old", "q_fresh"]
+    # third, then LRU (q_old round 1 before q_fresh round 2). q_regated
+    # is green in round 2, after the seal's round 1, so it left the
+    # touched tier for the LRU wheel.
+    assert e._rotated(names) == [
+        "q_fail", "q_new", "q_touched", "q_old", "q_fresh", "q_regated"
+    ]
+    # Without `round` every touched name stays in the tier.
+    (tmp_path / "TOUCHED_QUERIES.json").write_text(
+        json.dumps({"since": "abc", "queries": touched})
+    )
+    assert e._rotated(names) == [
+        "q_fail", "q_new", "q_touched", "q_regated", "q_old", "q_fresh"
+    ]
     # malformed artifact: tier degrades to a no-op, no crash.
     (tmp_path / "TOUCHED_QUERIES.json").write_text("{not json")
     assert e._touched_since_seal() == set()

@@ -43,16 +43,11 @@ def main() -> int:
     out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/sf1_synth"
     n = int(sys.argv[3]) if len(sys.argv) > 3 else 10
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .appName("make_scale_fixture")
-        .getOrCreate()
-    )
+    from taps_spark.session import get_spark
+
+    spark = get_spark("make_scale_fixture")
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(out, exist_ok=True)
 

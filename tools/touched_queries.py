@@ -11,6 +11,10 @@ environment only reads the committed JSON):
 
     python tools/touched_queries.py <previous-seal-ref>
 
+The file also records `round`, the newest CORRECTNESS_r<N> round at
+seal time: the rotation drops a touched name once it has a green row
+from a later round.
+
 Resolution is DEF-level with taint propagation (module-level rules
 marked 334/379 queries touched for the r13 diff, so the 50-query
 driver sample drew mostly untouched names and the tier stopped doing
@@ -19,9 +23,10 @@ its job):
 1. Per changed taps_spark module, diff hunks are mapped to top-level
    def/class spans (decorators included). Any changed line OUTSIDE
    every span (module constant / import churn) marks the module DIRTY:
-   every query defined in it or importing its basename re-gates — the
-   same errs-toward-inclusion rule as
-   local_correctness.changed_query_names, which stays the sweep gate.
+   every query defined in it or importing its basename re-gates.
+   `whole_modules=True` applies this rule to every changed module:
+   the errs-toward-inclusion slice `tools/measure.py --changed-since`
+   sweeps.
 2. Changed defs seed a taint set. Taint propagates to any top-level
    def whose body references a tainted name (word-boundary match) in
    the same module or in a module importing the tainted module's
@@ -93,7 +98,7 @@ def _imports_basename(src: str, basename: str) -> bool:
     return f"import {basename}" in src or f".{basename} import" in src
 
 
-def touched_for_rotation(ref: str) -> set[str]:
+def touched_for_rotation(ref: str, whole_modules: bool = False) -> set[str]:
     changed = subprocess.run(
         ["git", "diff", "--name-only", ref, "--", "*.py"],
         capture_output=True,
@@ -123,6 +128,9 @@ def touched_for_rotation(ref: str) -> set[str]:
             continue  # deleted module: defined queries vanish with it
         ranges = _changed_new_lines(ref, path)
         if not ranges:
+            continue
+        if whole_modules:
+            dirty_modules.add(path)
             continue
         try:
             spans = _top_level_spans(src_of(path))
@@ -234,10 +242,15 @@ def main() -> int:
         else os.path.join(REPO, "TOUCHED_QUERIES.json")
     )
     names = sorted(touched_for_rotation(ref))
+    seal = max(
+        (int(m.group(1)) for f in os.listdir(REPO)
+         if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f))),
+        default=0,
+    )
     with open(out_path, "w") as f:
-        json.dump({"since": ref, "queries": names}, f, indent=1)
+        json.dump({"since": ref, "round": seal, "queries": names}, f, indent=1)
         f.write("\n")
-    print(json.dumps({"since": ref, "n_touched": len(names), "out": out_path}))
+    print(json.dumps({"since": ref, "round": seal, "n_touched": len(names), "out": out_path}))
     return 0
 
 
