@@ -29,6 +29,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from taps_spark.io.tables import release  # noqa: E402
 from taps_spark.queries import all_queries  # noqa: E402
 from taps_spark.session import get_spark  # noqa: E402
 
@@ -111,6 +112,7 @@ def main() -> None:
     warm_dir = "/root/testdata/sf0.001"
     for name in HEADLINE:
         force(queries[name](spark, warm_dir))
+        release()
 
     # Median-of-N per query (default 3). Round-robin over the suite so
     # the N samples of one query are separated in time — back-to-back
@@ -122,6 +124,7 @@ def main() -> None:
             t0 = time.perf_counter()
             force(queries[name](spark, SF_DIR))
             samples[name].append(time.perf_counter() - t0)
+            release()  # outside the timed region
 
     timings = {name: round(statistics.median(ts), 3) for name, ts in samples.items()}
     spread = {name: round(max(ts) - min(ts), 3) for name, ts in samples.items()}

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 from taps_spark.io.sources import read_parquet
@@ -82,6 +83,49 @@ def parallelize_cpu(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+#: (SparkContext, RDD id) of each barrier built since the last
+#: `release()`. Ids, not RDD handles: a handle would keep an unreleased
+#: RDD from Spark's ContextCleaner.
+_BARRIERS: list[tuple[SparkContext, int]] = []
+
+
+def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
+    """The engine's one way to materialize a frame: a local checkpoint
+    that `release()` frees. Consumers read its rows instead of
+    replaying the lineage, and no filter is pushed through it.
+
+    Lazy by default: the blocks fill inside the caller's action, so the
+    barrier runs no job of its own (AQE still runs the shuffle stages
+    beneath it at build). `eager=True` is for a caller that reads an
+    `Observation` of the frame before any action of its own.
+
+    A checkpoint, not `persist()`: the CacheManager substitutes a
+    persisted plan into any later plan that matches it, so a second
+    call in the same session would read the first call's result.
+    Blocks are executor-local and not replicated: losing an executor
+    fails the query, which is retried whole (SCALE.md).
+    """
+    out = df.localCheckpoint(eager=eager)
+    rdd_id = out._jdf.queryExecution().analyzed().rdd().id()
+    _BARRIERS.append((df.sparkSession.sparkContext, rdd_id))
+    return out
+
+
+def release() -> None:
+    """Free the blocks of every barrier built since the last call,
+    whichever query built it, so its caller runs one query at a time.
+    The code that owns the action calls it after the action; earlier, a
+    lazy barrier would have nothing to read. Barriers nobody releases
+    are freed by ContextCleaner once their frames are collected."""
+    sc = SparkContext._active_spark_context
+    ids = [rdd_id for owner, rdd_id in _BARRIERS if owner is sc]
+    _BARRIERS.clear()
+    held = sc._jsc.getPersistentRDDs() if ids else None
+    for rdd_id in ids:
+        if held.containsKey(rdd_id):
+            held.get(rdd_id).unpersist(True)
 
 
 def load_tables(

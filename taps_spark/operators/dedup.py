@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from taps_spark.io.tables import materialize
 from taps_spark.operators.text import fingerprint, tokens
 
 
@@ -129,7 +130,7 @@ def band_bucket_scalars(
     dictionary-coded to ints first so the join key compare and the
     s{i} equality checks never touch the 65-char signature strings.
 
-    Output is localCheckpoint(eager)ed: it is tiny (one row per
+    Output is materialized: it is tiny (one row per
     (id, band)) and every caller self-joins it, which would otherwise
     recompute the signature pipeline per side.
     """
@@ -163,7 +164,7 @@ def band_bucket_scalars(
             "bid",
             *[F.col(str(i)).alias(f"s{i}") for i in range(n_bands - 1)],
         )
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
 
 
@@ -348,7 +349,7 @@ def connected_components(
     Scale: each round is one self-join-shaped aggregation (edges ⋈
     labels → min per node) — O(diameter) rounds, and dedup-cluster
     graphs have tiny diameters (near-cliques from LSH buckets), so
-    2-4 rounds in practice. localCheckpoint() truncates the lineage
+    2-4 rounds in practice. materialize() truncates the lineage
     each round or the plan doubles per iteration. For web-scale graphs
     switch to the large-star/small-star variant; the driver loop is
     identical.
@@ -361,7 +362,7 @@ def connected_components(
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     nodes = sym.select(F.col("a").alias("node")).distinct()
     labels = nodes.select("node", F.col("node").alias("component"))
@@ -399,7 +400,7 @@ def connected_components(
                 ),
             )
             .select("node", F.col("new_component").alias("component"))
-            .localCheckpoint()  # truncate lineage; plan doubles otherwise
+            .transform(materialize, eager=True)  # truncate lineage; plan doubles otherwise
         )
         labels = new_labels
         if obs.get["changed"] == 0:
@@ -436,7 +437,7 @@ def connected_components_star(
     SAME key (co-partitioned, single exchange feeds both), and edges
     only ever shrink. Convergence is an exact set comparison via
     count + order-independent hash-sum aggregate (one tiny job per
-    round). localCheckpoint() truncates lineage per round.
+    round). materialize() truncates lineage per round.
     """
     def _sig_metrics():
         # Order-independent exact edge-set signature (count + xor +
@@ -461,10 +462,10 @@ def connected_components_star(
     raw = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .localCheckpoint()
+        .transform(materialize)
     )
     obs0 = Observation()
-    e = raw.distinct().observe(obs0, *_sig_metrics()).localCheckpoint()
+    e = raw.distinct().observe(obs0, *_sig_metrics()).transform(materialize, eager=True)
 
     def _large_star(e: DataFrame) -> DataFrame:
         sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -501,7 +502,7 @@ def connected_components_star(
         e = (
             _small_star(_large_star(e))
             .observe(obs, *_sig_metrics())
-            .localCheckpoint()
+            .transform(materialize, eager=True)
         )
         m = obs.get
         new_sig = (m["n"], m["x"], m["s"])
@@ -872,7 +873,7 @@ def embedding_lsh_band_stats(
     # value, so the quotient is bit-identical).
     allb = portable_band_buckets(
         emb, id_col=id_col, vec_col=vec_col, bands=bands, planes=planes
-    ).withColumn("n2", dot(F.col("v"), F.col("v"))).localCheckpoint(eager=True)
+    ).withColumn("n2", dot(F.col("v"), F.col("v"))).transform(materialize)
 
     sizes = allb.groupBy("band", "bucket").agg(F.count("*").alias("n"))
     stats = sizes.groupBy("band").agg(

@@ -10,7 +10,7 @@ Scale notes: each PageRank iteration is one equi-join (ranks ⋈ edges
 on src) + one groupBy(dst) sum — two hash shuffles over the edge
 list, both on keys Spark can co-partition; pre-partitioning edges by
 src (or bucketing the edge table) makes the join exchange-free so an
-iteration costs ONE shuffle. `localCheckpoint` every iteration
+iteration costs ONE shuffle. `materialize` every iteration
 truncates the lineage so the plan doesn't double per round
 (the same pattern as dedup's label propagation).
 """
@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from taps_spark.io.tables import materialize
 
 
 def pagerank(
@@ -42,13 +44,13 @@ def pagerank(
     e = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .distinct()
-        .localCheckpoint()
+        .transform(materialize)
     )
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint()
+        .transform(materialize)
     )
     n = nodes.count()
     out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
@@ -57,9 +59,9 @@ def pagerank(
     base = (
         nodes.join(out_deg, nodes.node == out_deg.src, "left")
         .select("node", F.coalesce("deg", F.lit(0)).alias("deg"))
-        .localCheckpoint()
+        .transform(materialize)
     )
-    ranks = base.withColumn("rank", F.lit(1.0 / n)).localCheckpoint()
+    ranks = base.withColumn("rank", F.lit(1.0 / n)).transform(materialize)
 
     # Size-gated broadcast: the rank table has exactly n rows of
     # (node, deg, rank), so when the node set is executor-resident
@@ -72,8 +74,7 @@ def pagerank(
 
     for _ in range(iters):
         # Dangling mass rides along as a broadcast one-row aggregate —
-        # no driver-side collect; the localCheckpoint at the end of
-        # the iteration materializes everything in one job.
+        # no driver-side collect.
         dm = ranks.agg(
             F.coalesce(
                 F.sum(F.when(F.col("deg") == 0, F.col("rank"))), F.lit(0.0)
@@ -102,6 +103,6 @@ def pagerank(
                     * (F.coalesce("contrib", F.lit(0.0)) + F.col("dm") / F.lit(float(n)))
                 ).alias("rank"),
             )
-            .localCheckpoint()
+            .transform(materialize)
         )
     return ranks.select("node", "rank")

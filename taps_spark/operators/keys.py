@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from taps_spark.io.tables import materialize
+
 
 def assign_surrogate_keys(
     df: DataFrame, order_col: str, id_col: str = "sk", num_partitions: int | None = None
@@ -45,10 +47,8 @@ def assign_surrogate_keys(
     # picks boundaries by sampling, independently per job — without
     # this the offset-count job and the numbering job can see
     # DIFFERENT partitionings (observed at sf0.1: duplicate/gapped
-    # ids).  localCheckpoint pins one materialization both jobs read.
-    with_pid = ranged.withColumn("_pid", F.spark_partition_id()).localCheckpoint(
-        eager=True
-    )
+    # ids).  materialize() pins one materialization both jobs read.
+    with_pid = ranged.withColumn("_pid", F.spark_partition_id()).transform(materialize)
     # Driver-side offsets: one row per partition — jobs-scale, not data-scale.
     counts = {r["_pid"]: r["cnt"] for r in with_pid.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt")).collect()}
     offsets, acc = {}, 0
@@ -82,7 +82,7 @@ def prefix_sums(
     WITHOUT a global single-partition window.
 
     Same two-phase shape as assign_surrogate_keys: range-shuffle +
-    in-partition sort (pinned once — see the localCheckpoint note
+    in-partition sort (pinned once — see the materialize() note
     above), a jobs-scale per-partition totals collect prefix-summed
     into per-partition starting offsets, then a map-only pass adds
     offset + local cumulative sum. Equivalent to
@@ -108,9 +108,7 @@ def prefix_sums(
         if num_partitions
         else df.repartitionByRange(order_col)
     ).sortWithinPartitions(order_col)
-    with_pid = ranged.withColumn("_pid", F.spark_partition_id()).localCheckpoint(
-        eager=True
-    )
+    with_pid = ranged.withColumn("_pid", F.spark_partition_id()).transform(materialize)
     totals = with_pid.groupBy("_pid").agg(
         *[F.sum(c).alias(c) for c in sum_cols]
     ).collect()

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from taps_spark.io.tables import materialize
+
 
 def as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
@@ -136,18 +138,14 @@ def train_ivf_centroids(
     """
     # Materialize the training vectors only when more than one Lloyd
     # iteration will re-read them (at scale this frame is a SAMPLE —
-    # docstring — and caching it across iterations is the standard
-    # shape). At iters=1 the frame is read exactly twice (seed scan +
-    # one assign), and an eager checkpoint is a full extra
-    # materialize-the-corpus pass that costs more than the second
-    # column-pruned parquet scan it saves (guide §5: cache only when
-    # recompute exceeds the caching cost; measured in the r12 bench on
-    # similarity_ann_ivf).
+    # docstring). At iters=1 the frame is read exactly twice (seed scan
+    # + one assign), and a second column-pruned parquet scan costs less
+    # than holding the corpus in blocks.
     dv = emb.select(
         F.col(id_col).alias("_id"), as_double(F.col(vec_col)).alias("v")
     )
     if iters > 1:
-        dv = dv.localCheckpoint(eager=True)
+        dv = materialize(dv)
     # Rank the nlist seed vectors WITHOUT a global unpartitioned
     # window (that pattern serializes on one reducer as nlist grows):
     # ONE TakeOrdered job collects the nlist lowest-id rows to the
@@ -180,7 +178,7 @@ def train_ivf_centroids(
             # materialization each broadcast build re-executes the
             # whole Lloyd chain from the scan — plan-depth recompute,
             # not data volume, dominated training wall time.
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
     return cents
 
@@ -355,7 +353,7 @@ def train_pq_codebooks(
         F.posexplode(
             F.array(*[F.slice("v", s * sub + 1, sub) for s in range(m)])
         ).alias("s", "sv"),
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     seed_ids = dv.orderBy("_id").limit(ksub).agg(
         F.array_sort(F.collect_list("_id")).alias("_ids")
     )
@@ -389,7 +387,7 @@ def train_pq_codebooks(
             # m×ksub rows; materialize per iteration or every later
             # broadcast build re-runs the whole Lloyd chain (see
             # train_ivf_centroids).
-            .localCheckpoint(eager=True)
+            .transform(materialize)
         )
     return cents
 
@@ -550,7 +548,7 @@ def semantic_dedup(
     assigned = (
         assign_nearest_centroid(dv, cents)
         .select("_id", "v", F.col("centroid_id").alias("cluster_id"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     a = assigned.select(
         F.col("cluster_id"), F.col("_id").alias("id_a"), F.col("v").alias("va")

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from taps_spark.io.tables import load_tables, parallelize_cpu
+from taps_spark.io.tables import load_tables, materialize, parallelize_cpu
 from taps_spark.operators.dedup import (
     band_signatures,
     exact_dedup,
@@ -436,7 +436,7 @@ def _condensed_prelude(
             F.count("*").alias("n_docs"),
             F.sort_array(F.collect_list("doc_id")).alias("members"),
         )
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     # First-collision-band pair generation: identical pair SET to
     # `self-join → distinct`, but duplicate-free at the source — no
@@ -489,7 +489,7 @@ def _verified_scores(
 ) -> DataFrame:
     """Verify stage: gscored[src, dst, j] — exact token-set Jaccard for
     every candidate group pair passing the (lossless) size-ratio
-    prefilter at `threshold`, MATERIALIZED (localCheckpoint). Callers
+    prefilter at `threshold`, MATERIALIZED (`materialize`). Callers
     filter `j >= t` for any t >= threshold.
 
     The Jaccard is computed in a projection and the threshold filter
@@ -514,7 +514,7 @@ def _verified_scores(
         .select(
             "src", "dst", jaccard_hashed(F.col("toks_a"), F.col("toks_b")).alias("j")
         )
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
 
 
@@ -996,7 +996,7 @@ def _lsh_probe_scores(docs: DataFrame, new_ids: DataFrame) -> DataFrame:
                 F.collect_list(F.when(F.col("_new").isNull(), F.col("doc_id")))
             ).alias("corpus_members"),
         )
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     # First-collision-band candidates (no distinct shuffle — see
     # band_bucket_scalars); a group present on both sides collides
@@ -1026,7 +1026,7 @@ def _lsh_probe_scores(docs: DataFrame, new_ids: DataFrame) -> DataFrame:
         .select(
             "src", "dst", jaccard_hashed(F.col("toks_a"), F.col("toks_b")).alias("j")
         )
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     same = cand.filter(F.col("src") == F.col("dst")).select(
         "src", "dst", F.lit(1.0).alias("j")
@@ -1310,19 +1310,11 @@ def dedup_bloom_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     incoming = fp.filter(F.col("doc_id") % 2 == 1)
 
     bloom = bloom_build(existing, "fp")
-    # localCheckpoint, NOT persist: the two union branches below both
-    # read the probed frame, and Spark does not common-subexpression-
-    # eliminate across Union branches — without a materialization the
-    # bitmap build would run once per branch. persist() is the wrong
-    # tool here (r13): Spark's CacheManager substitutes cached data
-    # into ANY later plan that canonically matches, and this subtree
-    # is a deterministic function of the parquet inputs — so a second
-    # invocation of the query in the same session (bench reps 2..N)
-    # would silently read the first invocation's cache instead of
-    # computing. A checkpoint is backed by a fresh RDD per invocation,
-    # so every run pays its own compute (measured honestly) while the
-    # within-run dedup is preserved.
-    probed = bloom_probe(incoming, bloom, "fp").localCheckpoint(eager=True)
+    # The two union branches below both read the probed frame, and
+    # Spark does not common-subexpression-eliminate across Union
+    # branches — without a materialization the bitmap build would run
+    # once per branch.
+    probed = bloom_probe(incoming, bloom, "fp").transform(materialize)
     misses = probed.filter(~F.col("bloom_maybe")).withColumn("is_dup", F.lit(False))
     # One LEFT join verifies candidates: present → dup, absent → the
     # bloom false positive, still correctly 'new'.

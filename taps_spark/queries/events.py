@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from taps_spark.io.tables import load_tables
+from taps_spark.io.tables import load_tables, materialize
 from taps_spark.operators.events import (
     session_stats,
     sliding_window_agg,
@@ -3102,7 +3102,7 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from the scan up: 2 executions for 24 output rows. The ≤24-row
     # checkpoint executes it once; bounded by the hour-of-day domain
     # at any corpus size.
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     glob = hourly.agg(
         F.max("peak_concurrency").alias("peak_concurrency"),
         F.sum("n_active_minutes").alias("n_active_minutes"),

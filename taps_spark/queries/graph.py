@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from taps_spark.io.tables import load_tables
+from taps_spark.io.tables import load_tables, materialize
 from taps_spark.queries import query
 
 
@@ -174,7 +174,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same reason. `oriented` (same edge-grain size) is checkpointed
     # too: it feeds three consumers, each of which would replay the
     # degree joins.
-    edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = _copurchase_edges(spark, sf_dir).transform(materialize)
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
@@ -193,7 +193,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("lo"),
             F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("hi"),
         )
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     a = oriented.select(F.col("lo").alias("pivot"), F.col("hi").alias("x"))
     bb = oriented.select(F.col("lo").alias("pivot"), F.col("hi").alias("y"))
@@ -273,7 +273,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the wedge self-join twice plus nbr, and edges additionally backs
     # the adjacency anti-join; un-checkpointed, each reference
     # replayed the co-purchase self-join (§1.2).
-    edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = _copurchase_edges(spark, sf_dir).transform(materialize)
     sym = edges.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
         edges.select(F.col("v").alias("a"), F.col("u").alias("b"))
     )
@@ -328,7 +328,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: each round is one degree aggregation + one semi-join edge
     filter — the same two shuffles per iteration as PageRank, with
-    localCheckpoint truncating lineage. Rounds are data-bounded
+    materialize() truncating lineage. Rounds are data-bounded
     (each round removes ≥ 1 node or terminates); the loop exits on a
     fixpoint test over a 1-row count, not a collected node list, and
     raises if 50 rounds pass without one (a long chain peels only its
@@ -337,7 +337,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholded edge base every graph query here uses (support ≥ 2 keeps the graph sparse,
     see graph_triangle_count).
     """
-    edges0 = _copurchase_edges(spark, sf_dir).localCheckpoint()
+    edges0 = _copurchase_edges(spark, sf_dir).transform(materialize)
     out = None
     edges = edges0
     for k in (2, 3, 4):
@@ -355,16 +355,10 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy("node")
                 .agg(F.count(F.lit(1)).alias("d"))
             )
-            # LAZY checkpoints (r13): the eager keep-checkpoint +
-            # count + eager edges-checkpoint sequence ran THREE jobs
-            # per round; marking both lazily lets keep.count()
-            # materialize keep (and the previous round's edges, whose
-            # first consumer is this deg) in ONE job per round —
-            # §1.2 tiny-job churn, same class as the BFS fix.
             keep = (
                 deg.filter(F.col("d") >= k)
                 .select("node")
-                .localCheckpoint(eager=False)
+                .transform(materialize)
             )
             n_now = keep.count()
             if n_now == n_prev:
@@ -376,7 +370,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 .join(keep.select(F.col("node").alias("v")), "v", "left_semi")
                 .select("u", "v")
-                .localCheckpoint(eager=False)
+                .transform(materialize)
             )
         else:
             raise RuntimeError(
@@ -457,7 +451,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Algorithm: frontier BFS as a DataFrame loop — visited and
     frontier frames, one equi-join (frontier ⋈ edges) + one anti-join
-    (drop visited) per hop, localCheckpoint per round so the plan
+    (drop visited) per hop, materialize() per round so the plan
     stays flat (the operators/graph.py pagerank law). Min-hop
     semantics are order-free: a node joins the level set the FIRST
     round it is reachable, so no tiebreak exists to get wrong.
@@ -480,7 +474,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.struct(F.col("v").alias("a"), F.col("u").alias("b")),
             )
         ).alias("e")
-    ).select(F.col("e.a").alias("a"), F.col("e.b").alias("b")).localCheckpoint()
+    ).select(F.col("e.a").alias("a"), F.col("e.b").alias("b")).transform(materialize)
     seeds = (
         sym.select(F.col("a").alias("node"))
         .distinct()
@@ -488,7 +482,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(5)
         .select("node")
     )
-    visited = seeds.select("node", F.lit(0).alias("hop")).localCheckpoint()
+    visited = seeds.select("node", F.lit(0).alias("hop")).transform(materialize)
     frontier = visited.select("node")
     levels = [visited]
     for hop in range(1, 5):
@@ -498,7 +492,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .select("node", F.lit(hop).alias("hop"))
-            .localCheckpoint()
+            .transform(materialize)
         )
         levels.append(nxt)
         # visited stays a LAZY union of the (already checkpointed)
@@ -611,7 +605,7 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same reason. `oriented` (same edge-grain size) is checkpointed
     # too: it feeds three consumers, each of which would replay the
     # degree joins.
-    edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = _copurchase_edges(spark, sf_dir).transform(materialize)
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
@@ -630,7 +624,7 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("lo"),
             F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("hi"),
         )
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     a = oriented.select(F.col("lo").alias("pivot"), F.col("hi").alias("x"))
     bb = oriented.select(F.col("lo").alias("pivot"), F.col("hi").alias("y"))
@@ -727,7 +721,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: same edge-list barrier as the triangle family — 5 lineage
     # references (deg union x2, the degree-tagged join, nn) otherwise
     # each replay the co-purchase self-join (§1.2).
-    edges = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=True)
+    edges = _copurchase_edges(spark, sf_dir).transform(materialize)
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
@@ -739,7 +733,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `both` feeds the symmetrized union twice; checkpoint so the two
     # degree joins execute once (edge-grain rows, bounded by the
     # thresholded edge list).
-    both = edges.join(du, "u").join(dv, "v").localCheckpoint(eager=True)
+    both = edges.join(du, "u").join(dv, "v").transform(materialize)
     de = both.select(
         F.col("dxu").alias("dx"), F.col("dyv").alias("dy")
     ).unionAll(both.select(F.col("dyv").alias("dx"), F.col("dxu").alias("dy")))

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from taps_spark.io.tables import load_tables
+from taps_spark.io.tables import load_tables, materialize
 from taps_spark.operators.profiling import hash_sample, profile_table
 from taps_spark.queries import query
 
@@ -2310,7 +2310,7 @@ def stats_kendall_tau_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(bucket_map(yv, "y", "yb"), ["flag", "y"])
         .groupBy("flag", "xb", "yb")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
 
     # Dominance count on the bounded grid — same per-level union as

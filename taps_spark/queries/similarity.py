@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from taps_spark.io.tables import load_tables
+from taps_spark.io.tables import load_tables, materialize
 from taps_spark.operators.similarity import topk_bruteforce, topk_ivf, topk_lsh
 from taps_spark.queries import query
 
@@ -1465,18 +1465,14 @@ def similarity_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine(F.col("q_vec"), F.col("embedding")).alias("_score"),
         )
     )
-    # Eager materialization so the brute-force ground-truth pass
-    # executes ONCE and the 4 nprobe points read the 32x5-row result —
-    # without it each sweep point replayed the whole broadcast-cosine
-    # corpus scan (4 brute-force subtrees in the executed plan; guide
-    # §1.2 / r12 VERDICT task #6), and a lazy persist would still race
-    # when the union's branches materialize concurrently. Built inside
-    # the query from the parquet inputs on every invocation — nothing
-    # crosses runs.
+    # Materialized so the brute-force ground-truth pass executes ONCE
+    # and the 4 nprobe points read the 32x5-row result — without it
+    # each sweep point replayed the whole broadcast-cosine corpus scan
+    # (4 brute-force subtrees in the executed plan).
     exact = (
         _topk_reduce(scored, "q_id", "vec_id", 5)
         .select("q_id", "neighbor_id")
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
 
     nlist = 16
@@ -1492,7 +1488,7 @@ def similarity_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "_id"
         ),
         cents,
-    ).select(F.col("_id").alias("vec_id"), "v", "centroid_id").localCheckpoint(eager=True)
+    ).select(F.col("_id").alias("vec_id"), "v", "centroid_id").transform(materialize)
     qv = queries.select("q_id", as_double(F.col("q_vec")).alias("qv"))
     d2 = F.aggregate(
         F.zip_with(F.col("qv"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
@@ -1504,7 +1500,7 @@ def similarity_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         qv.join(F.broadcast(cents))
         .select("q_id", "qv", "centroid_id", d2.alias("_d"))
         .withColumn("_pr", F.row_number().over(wprobe))
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
 
     out = None
     for nprobe in (1, 2, 4, 16):
@@ -1697,7 +1693,7 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("r", F.row_number().over(ws))
         .filter(F.col("r") <= 12)
         .select("q_id", "cand", "sim")
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     cv = emb.select(F.col("vec_id").alias("cand"), F.col("embedding").alias("cv"))
     sv = short.join(F.broadcast(cv), "cand").select("q_id", "cand", "cv")
@@ -1712,7 +1708,7 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cand_b",
             cosine(F.col("va"), F.col("vb")).alias("psim"),
         )
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
 
     wpick = Window.partitionBy("q_id").orderBy(F.col("mmr").desc(), F.col("cand"))
@@ -1721,7 +1717,7 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("r", F.row_number().over(wpick))
         .filter(F.col("r") == 1)
         .select("q_id", "cand", "mmr", F.lit(1).alias("pick_rank"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     picked = p1
     for k in (2, 3, 4):
@@ -1749,7 +1745,7 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("r") == 1)
             .select("q_id", "cand", "mmr", F.lit(k).alias("pick_rank"))
         )
-        picked = picked.unionByName(pick_k).localCheckpoint(eager=True)
+        picked = picked.unionByName(pick_k).transform(materialize)
     return picked.select(
         "q_id",
         "pick_rank",

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from taps_spark.io.tables import load_tables
+from taps_spark.io.tables import load_tables, materialize
 from taps_spark.operators.multimodal import extract_features, synthesize_assets
 from taps_spark.operators.text import language_id, quality_features, tokens
 from taps_spark.queries import query
@@ -401,7 +401,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = (
         toks.groupBy("doc_id", "tok")
         .agg(F.count("*").alias("term_freq"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     df_tbl = tf.groupBy("tok").agg(F.count("*").alias("doc_freq"))
     n_docs = docs.select(F.count_distinct("doc_id").alias("n_docs"))
@@ -1097,12 +1097,7 @@ def text_contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     bloom = bloom_build(eval_grams, "gram")
 
     train = dg.filter(F.col("bucket") >= 2)
-    # localCheckpoint, not persist: a persisted deterministic plan is
-    # substituted by the CacheManager into any later matching plan, so
-    # a second same-session invocation would read this run's cache —
-    # cross-run result reuse the bench must never see (see
-    # dedup_incremental's probed comment, r13).
-    probed = bloom_probe(train, bloom, "gram").localCheckpoint(eager=True)
+    probed = bloom_probe(train, bloom, "gram").transform(materialize)
     # Probe-miss grams are DEFINITELY clean (no false negatives);
     # probe-hit grams get the exact membership verdict.
     verified = (
@@ -1814,7 +1809,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str, rounds: int = 3):
     # Checkpoint the vocabulary-scale dict ONCE: without this, every
     # round's pair-count job AND merge fold re-tokenizes the corpus
     # (the iterate-over-a-checkpointed-input lesson, SCALE.md).
-    seqs = words.select("wc", F.split("tok", "").alias("syms")).localCheckpoint(eager=True)
+    seqs = words.select("wc", F.split("tok", "").alias("syms")).transform(materialize)
     merges = []
     for r in range(1, rounds + 1):
         pairs = seqs.select(
@@ -1843,7 +1838,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str, rounds: int = 3):
                 f" concat(slice(acc, 1, size(acc) - 1), array('{a}{b}')),"
                 " concat(acc, array(x))))"
             ),
-        ).localCheckpoint(eager=True)  # vocabulary-scale; truncates per-round lineage
+        ).transform(materialize)  # vocabulary-scale; truncates per-round lineage
     return merges, seqs
 
 
@@ -3577,7 +3572,7 @@ def text_common_ngram_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     tric = (
         tri.groupBy("source", "g")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     # orderBy+limit compiles to TakeOrderedAndProject — a map-side
     # top-20 per partition reduced on the driver, NOT a global sort
@@ -3829,7 +3824,7 @@ def text_source_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("source", F.explode(tokens("text")).alias("tok"))
         .groupBy("source", "tok")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     tot = tc.groupBy("source").agg(F.sum("c").alias("n"))
     pairs = (
@@ -4258,7 +4253,7 @@ def text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", "source", F.explode(tokens("text")).alias("tok"))
         .groupBy("doc_id", "source", "tok")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     top = (
         dtc.groupBy("tok")

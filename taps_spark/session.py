@@ -97,7 +97,11 @@ def get_spark(app_name: str = "taps_spark", shuffle_partitions: int | None = Non
     that starts the SparkContext; a session owned by an outside harness
     keeps Spark's default of 100 entries.
     """
+    import atexit
+    import shutil
     import tempfile
+
+    from pyspark import SparkContext
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
     shuffle = shuffle_partitions or cpus
@@ -107,14 +111,17 @@ def get_spark(app_name: str = "taps_spark", shuffle_partitions: int | None = Non
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        # Keep warehouse/metastore droppings out of the repo (static
-        # confs — only effective for the session that creates the JVM).
-        .config("spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="taps_wh_"))
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Dderby.system.home={tempfile.mkdtemp(prefix='taps_derby_')}",
-        )
     )
+    if SparkContext._active_spark_context is None:
+        # Keep warehouse/metastore droppings out of the repo. Static
+        # confs, so only the call that starts the JVM makes the dirs;
+        # they go when the process exits.
+        wh, derby = (tempfile.mkdtemp(prefix=p) for p in ("taps_wh_", "taps_derby_"))
+        for d in (wh, derby):
+            atexit.register(shutil.rmtree, d, ignore_errors=True)
+        builder = builder.config("spark.sql.warehouse.dir", wh).config(
+            "spark.driver.extraJavaOptions", f"-Dderby.system.home={derby}"
+        )
     for k, v in {**STATIC_CONFS, **RUNTIME_CONFS}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -12,7 +12,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from taps_spark.io.tables import TABLE_NAMES, table_path  # noqa: E402
+from taps_spark.io.tables import TABLE_NAMES, release, table_path  # noqa: E402
 from taps_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
@@ -23,6 +23,13 @@ def spark():
     spark = get_spark("taps_spark_tests")
     yield spark
     spark.stop()
+
+
+@pytest.fixture(autouse=True)
+def _release_barriers():
+    """Free each test's barriers once it has run its actions."""
+    yield
+    release()
 
 
 @pytest.fixture(scope="session")

@@ -1,6 +1,7 @@
 """No result crosses invocations: a query re-reads its input on every
 call (a file rewritten in place under the same path is seen afresh)
-and leaves nothing behind in Spark's CacheManager."""
+and leaves nothing behind in Spark's CacheManager, nor any block once
+its barriers are released."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ import shutil
 
 import pytest
 
+from taps_spark.io.tables import release
 from taps_spark.queries import REGISTRY, _load
 
 
@@ -60,6 +62,8 @@ def test_lsh_query_rereads_input_rewritten_in_place(spark, sf_dir, tmp_path, nam
         "similarity_ivf_recall_sweep",
         "similarity_ann_pq",
         "events_stream_tumbling",
+        "graph_kcore",
+        "dedup_connected_components",
     ],
 )
 def test_query_leaves_cache_manager_empty(spark, sf_dir, name):
@@ -67,6 +71,9 @@ def test_query_leaves_cache_manager_empty(spark, sf_dir, name):
     spark.catalog.clearCache()
     REGISTRY[name].fn(spark, sf_dir).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    # Its barriers hold no block once released.
+    release()
+    assert [i.name() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()] == []
     # A stream query's memory sink leaves no view in the session catalog.
     assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("taps_stream_sink_")]
 

@@ -178,10 +178,17 @@ def test_listing_filter_matches_sparks(spark):
         assert _listed(name) == (not spark_filter(name)), name
 
 
-def test_one_way_to_read_parquet():
-    """Every parquet read under taps_spark/ goes through read_parquet."""
-    pattern = re.compile(r"\.read\.parquet\(")
-    allowed = os.path.join(ROOT, "taps_spark", "io", "sources.py")
+@pytest.mark.parametrize(
+    "pattern,owner",
+    [(r"\.read\.parquet\(", "sources.py"), (r"\.localCheckpoint\(", "tables.py")],
+    ids=["read_parquet", "localCheckpoint"],
+)
+def test_one_way_to_read_parquet(pattern, owner):
+    """Every parquet read under taps_spark/ goes through read_parquet,
+    and every checkpoint through materialize: each call has one owner
+    module under taps_spark/io/."""
+    pattern = re.compile(pattern)
+    allowed = os.path.join(ROOT, "taps_spark", "io", owner)
     offenders = []
     for dirpath, _, files in os.walk(os.path.join(ROOT, "taps_spark")):
         for f in files:

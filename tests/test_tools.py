@@ -116,12 +116,14 @@ def test_measure_sweep_records(spark, sf_dir):
         "exec.shuffle_bytes", "exec.spill_bytes", "io.scan_bytes", "io.scan_s",
         "python.bytes_sent", "python.bytes_returned", "python.worker_start_s",
         "python.worker_init_s", "python.worker_run_s", "codegen_compiles", "rows", "status",
+        "blocks_left",
     }
     assert set(results["agg_approx"]) == keys
     assert set(results["q1_pricing_summary"]) == set(results["q5_region_revenue"]) == keys | {"oracle_rows"}
     for rec in results.values():
         assert rec["jobs"] >= rec["build_jobs"] >= 0 and rec["jobs"] > 0
         assert rec["rows"] > 0
+        assert rec["blocks_left"] == 0
     assert results["q1_pricing_summary"]["oracle_rows"] == 1 < results["q1_pricing_summary"]["rows"]
 
 

@@ -1,12 +1,13 @@
 """One sweep over the query registry: a record per query, checked
 against its DuckDB oracle.
 
-Each query is built (`build_s`; `build_jobs` are the eager barriers
-run before the caller's action), then forced once with `toPandas()`
-(`action_s`), the action the external driver and perfbench perform.
-perfbench's `SparkProbe` reads jobs, stages, tasks and the SQL metrics
-(shuffle, spill and scan bytes, Python-worker bytes and times); the
-record adds `codegen_compiles` and `rows`. The oracle compare is
+Each query is built (`build_s`; `build_jobs` are the jobs the build
+runs before the caller's action), then forced once with `toPandas()`
+(`action_s`), the action the external driver and perfbench perform,
+and its barriers are released. perfbench's `SparkProbe` reads jobs,
+stages, tasks and the SQL metrics (shuffle, spill and scan bytes,
+Python-worker bytes and times); the record adds `codegen_compiles`,
+`rows` and `blocks_left`, the RDDs still holding blocks. The oracle compare is
 untimed and dtype-strict (`_norm`): `status` is `pass`, `FAIL`, or
 `rows_only` for a query without an oracle.
 
@@ -134,6 +135,7 @@ def fresh_session(spark=None, dead: bool = False):
 
 def _measure(spark, fn, sf_dir: str):
     """Build and force one query; return its record and its result."""
+    from taps_spark.io.tables import release
     from taps_spark.session import codegen_compiles
 
     probe = SparkProbe(spark)
@@ -151,11 +153,13 @@ def _measure(spark, fn, sf_dir: str):
     build_jobs = probe.jobs_since(mark)
     pdf = df.toPandas()
     t2 = time.perf_counter()
+    release()
     c = probe.since(mark)
     rec = {"build_s": round(t1 - t0, 3), "action_s": round(t2 - t1, 3),
            "jobs": int(c.pop("spark.jobs")), "build_jobs": build_jobs,
            "stages": int(c.pop("spark.stages")), "tasks": int(c.pop("spark.tasks")),
-           **c, "codegen_compiles": codegen_compiles(spark) - c0, "rows": len(pdf)}
+           **c, "codegen_compiles": codegen_compiles(spark) - c0, "rows": len(pdf),
+           "blocks_left": len(spark.sparkContext._jsc.sc().getRDDStorageInfo())}
     return rec, pdf
 
 
