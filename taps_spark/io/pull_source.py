@@ -354,25 +354,19 @@ def register_pull_source(spark) -> None:
 def sqlite_from_parquet(
     parquet_path: str, db_path: str, table: str, columns: list[str] | None = None
 ) -> str:
-    """Materialize a parquet table into a sqlite database — the
-    live-endpoint builder for tests and the registry demo (a stand-in
-    for the user's actual source DB). Integer columns → INTEGER,
-    floats → REAL, everything else stored as TEXT via str().
+    """Materialize a parquet table into a new sqlite database at
+    `db_path` — the live-endpoint builder for tests and the registry
+    demo (a stand-in for the user's actual source DB). Integer columns
+    → INTEGER, floats → REAL, everything else stored as TEXT via str().
 
-    Idempotent and atomic: skipped when the db is newer than the
-    parquet; built at a temp path and os.replace'd into place so a
-    concurrent reader never sees a half-built file.
+    Built on every call, from the parquet as it is now; the caller
+    owns the path (the registry queries pass a `scratch()` dir).
     """
-    import os
     import sqlite3
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    if os.path.exists(db_path) and os.path.getmtime(db_path) >= os.path.getmtime(
-        parquet_path
-    ):
-        return db_path
     t = pq.read_table(parquet_path, columns=columns)
     decls, converters = [], []
     for field in t.schema:
@@ -385,8 +379,7 @@ def sqlite_from_parquet(
         else:
             decls.append(f'"{field.name}" TEXT')
             converters.append(lambda v: None if v is None else str(v))
-    tmp = f"{db_path}.build-{os.getpid()}"
-    con = sqlite3.connect(tmp)
+    con = sqlite3.connect(db_path)
     try:
         con.execute(f'CREATE TABLE "{table}" ({", ".join(decls)})')
         cols = t.to_pydict()
@@ -398,15 +391,4 @@ def sqlite_from_parquet(
         con.commit()
     finally:
         con.close()
-    os.replace(tmp, db_path)
     return db_path
-
-
-def scratch_dir() -> str:
-    """Repo-anchored scratch directory (the engine never writes
-    outside the repo tree)."""
-    import os
-
-    d = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
-    os.makedirs(d, exist_ok=True)
-    return d

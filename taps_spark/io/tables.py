@@ -13,7 +13,10 @@ discovery/filter surface.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
@@ -67,7 +70,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def parallelize_cpu(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def parallelize_cpu(df: DataFrame) -> DataFrame:
     """Round-robin repartition when the scan has fewer partitions than
     cores — for CPU-heavy per-row operators (shingling, hash families,
     vector math) whose input is small but whose map work is not.
@@ -79,7 +82,7 @@ def parallelize_cpu(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     file count exceeds the core count and this is a no-op, so the
     shuffle never appears where it would hurt.
     """
-    target = min_parts or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
@@ -89,6 +92,9 @@ def parallelize_cpu(df: DataFrame, min_parts: int | None = None) -> DataFrame:
 #: `release()`. Ids, not RDD handles: a handle would keep an unreleased
 #: RDD from Spark's ContextCleaner.
 _BARRIERS: list[tuple[SparkContext, int]] = []
+
+#: Every scratch dir made since the last `release()`.
+_SCRATCH: list[str] = []
 
 
 def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
@@ -113,11 +119,34 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
     return out
 
 
+def scratch(prefix: str) -> str:
+    """The engine's one way to get a temp dir: a fresh directory under
+    `tempfile.gettempdir()` for a query's files (a stream's source view,
+    sink and checkpoint, a sqlite endpoint). Fresh on every call, so
+    nothing one call writes stands in for the next call's input.
+
+    The query's frame may read it lazily, so it lives until `release()`
+    removes it after the caller's action, or until the process exits."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    _SCRATCH.append(d)
+    return d
+
+
+def _remove_scratch() -> None:
+    while _SCRATCH:
+        shutil.rmtree(_SCRATCH.pop(), ignore_errors=True)
+
+
+# Callers of `__spark_entry__` and perfbench never call release().
+atexit.register(_remove_scratch)
+
+
 def release() -> None:
-    """Free the blocks of every barrier built since the last call,
-    whichever query built it, so its caller runs one query at a time.
-    The code that owns the action calls it after the action; earlier, a
-    lazy barrier would have nothing to read. Barriers nobody releases
+    """Free the blocks of every barrier built since the last call, then
+    remove every scratch dir, whichever query made them, so its caller
+    runs one query at a time. The code that owns the action calls it
+    after the action; earlier, a lazy barrier or a lazy scan of a
+    scratch dir would have nothing to read. Barriers nobody releases
     are freed by ContextCleaner once their frames are collected."""
     sc = SparkContext._active_spark_context
     ids = [rdd_id for owner, rdd_id in _BARRIERS if owner is sc]
@@ -126,6 +155,7 @@ def release() -> None:
     for rdd_id in ids:
         if held.containsKey(rdd_id):
             held.get(rdd_id).unpersist(True)
+    _remove_scratch()
 
 
 def load_tables(

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from taps_spark.catalog import apply_table_filter, compile_table_pattern, discover_tables, table_counts
 from taps_spark.io.sources import read_parquet
-from taps_spark.io.tables import load_tables
+from taps_spark.io.tables import load_tables, scratch
 from taps_spark.queries import query
 
 TABLE_COUNTS_ORACLE = """
@@ -396,22 +396,19 @@ def scan_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate ABSORBED into chunk planning via pushFilters — the
     filter narrows what gets chunked, not just what's returned.
 
-    The sqlite endpoint is (re)built from the orders fixture on first
-    use — a stand-in for the user's source database, exercising the
-    full plan→connect→pull→verify path with a real SQL engine on the
-    other side. See taps_spark/io/pull_source.py.
+    The sqlite endpoint is built from the orders fixture on every call,
+    in a scratch dir that `release()` removes — a stand-in for the
+    user's source database, exercising the full plan→connect→pull→verify
+    path with a real SQL engine on the other side. See
+    taps_spark/io/pull_source.py.
     """
     import os
 
-    from taps_spark.io.pull_source import (
-        register_pull_source,
-        scratch_dir,
-        sqlite_from_parquet,
-    )
+    from taps_spark.io.pull_source import register_pull_source, sqlite_from_parquet
 
     db = sqlite_from_parquet(
         os.path.join(sf_dir, "orders.parquet"),
-        os.path.join(scratch_dir(), f"pull_{os.path.basename(os.path.normpath(sf_dir))}.db"),
+        os.path.join(scratch("taps_pull_"), "orders.db"),
         "orders",
         columns=["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"],
     )
@@ -642,28 +639,20 @@ def transfer_stream_pull(spark: SparkSession, sf_dir: str) -> DataFrame:
     trickling through the reference's single cursor.
     """
     import os
-    import tempfile
 
-    from taps_spark.io.pull_source import (
-        register_pull_source,
-        scratch_dir,
-        sqlite_from_parquet,
-    )
+    from taps_spark.io.pull_source import register_pull_source, sqlite_from_parquet
 
+    # Ephemeral source, sink and checkpoint: every invocation replays
+    # the full replication from a fresh offset log (the resume path is
+    # pinned separately in pytest with a persistent checkpoint).
+    work = scratch("taps_stream_pull_")
     register_pull_source(spark)
     db = sqlite_from_parquet(
         os.path.join(sf_dir, "orders.parquet"),
-        os.path.join(
-            scratch_dir(),
-            f"stream_pull_{os.path.basename(os.path.normpath(sf_dir))}.db",
-        ),
+        os.path.join(work, "orders.db"),
         "orders",
         columns=["o_orderkey", "o_custkey", "o_totalprice"],
     )
-    # Ephemeral sink + checkpoint: every invocation replays the full
-    # replication from a fresh offset log (the resume path is pinned
-    # separately in pytest with a persistent checkpoint).
-    work = tempfile.mkdtemp(prefix="taps_stream_pull_")
     out, ckpt = os.path.join(work, "out"), os.path.join(work, "ckpt")
     q = (
         spark.readStream.format("taps_pull")

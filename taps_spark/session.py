@@ -84,11 +84,11 @@ def codegen_compiles(spark: SparkSession) -> int:
     return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
-def get_spark(app_name: str = "taps_spark", shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "taps_spark") -> SparkSession:
     """Build a local session for tests/benchmarks.
 
-    Honors SPARK_GRAFT_CPUS for parallelism; shuffle partitions default
-    to the core count (200 default is wrong at every local scale —
+    Honors SPARK_GRAFT_CPUS for parallelism; shuffle partitions are
+    the core count (200 default is wrong at every local scale —
     over-parallelized for tiny data, under for huge).
 
     Applies `STATIC_CONFS`: the codegen cache holds a whole pass's
@@ -104,11 +104,10 @@ def get_spark(app_name: str = "taps_spark", shuffle_partitions: int | None = Non
     from pyspark import SparkContext
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
-    shuffle = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

@@ -24,38 +24,33 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from taps_spark.io.sources import read_parquet
-from taps_spark.io.tables import table_path
+from taps_spark.io.tables import scratch, table_path
 from taps_spark.session import tune
 
 _SINK_IDS = itertools.count()
-_STREAM_DIRS: dict[str, str] = {}
 
 
 def _as_stream_dir(sf_dir: str) -> str:
-    """Directory view over the events table (symlinks in a session
-    temp dir; cached per sf_dir). The fixture ships events.parquet as
-    a single FILE; Spark-written tables are a DIRECTORY of part files.
-    The file stream source does not recurse into a symlinked
-    subdirectory (it listed ZERO files and every downstream batch
-    silently vanished — caught by the r9 scale fixture), so link each
-    part file individually — which is also the honest landing-zone
-    shape: files arrive one by one."""
-    if sf_dir not in _STREAM_DIRS:
-        import os
-        import tempfile
+    """Directory view over the events table: symlinks in a fresh
+    scratch dir, built on every call, so a later call never reads an
+    earlier call's view. The fixture ships events.parquet as a single
+    FILE; Spark-written tables are a DIRECTORY of part files. The file
+    stream source does not recurse into a symlinked subdirectory (it
+    listed ZERO files and every downstream batch silently vanished —
+    caught by the r9 scale fixture), so link each part file
+    individually — which is also the honest landing-zone shape: files
+    arrive one by one. Removing the dir removes only the links."""
+    import os
 
-        d = tempfile.mkdtemp(prefix="taps_stream_")
-        src = table_path(sf_dir, "events")
-        if os.path.isdir(src):
-            for i, name in enumerate(sorted(os.listdir(src))):
-                if name.endswith(".parquet"):
-                    os.symlink(
-                        os.path.join(src, name), os.path.join(d, f"part{i}.parquet")
-                    )
-        else:
-            os.symlink(src, os.path.join(d, "events.parquet"))
-        _STREAM_DIRS[sf_dir] = d
-    return _STREAM_DIRS[sf_dir]
+    d = scratch("taps_stream_")
+    src = table_path(sf_dir, "events")
+    if os.path.isdir(src):
+        for i, name in enumerate(sorted(os.listdir(src))):
+            if name.endswith(".parquet"):
+                os.symlink(os.path.join(src, name), os.path.join(d, f"part{i}.parquet"))
+    else:
+        os.symlink(src, os.path.join(d, "events.parquet"))
+    return d
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -64,7 +59,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     topic in production)."""
     tune(spark)
     # The fixture is a single parquet FILE but the file stream source
-    # requires a directory. Expose it through a (cached) temp dir of
+    # requires a directory. Expose it through a scratch dir of
     # symlinks — zero copy, and exactly how a production landing zone
     # looks: a directory where files arrive.
     # Schema from the file's footer on every call, NOT hardcoded or
@@ -262,11 +257,9 @@ def stream_foreach_batch_idempotent(spark: SparkSession, sf_dir: str) -> DataFra
     whole point — retries and replays are free. Returns the sink
     contents read back.
     """
-    import tempfile
-
     from taps_spark.io.sinks import append_idempotent
 
-    target = tempfile.mkdtemp(prefix="taps_fes_") + "/agg"
+    target = scratch("taps_fes_") + "/agg"
 
     def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         append_idempotent(spark, batch_df, target, ["window_start", "event_type"])
@@ -391,12 +384,10 @@ def stream_continuous_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     production the merge maps onto Delta/Iceberg MERGE INTO with
     partition pruning on hour_start (io/sinks.merge_upsert docs).
     """
-    import tempfile
-
     from taps_spark.io.sinks import merge_upsert
     from taps_spark.queries.numeric import DECIMAL_T
 
-    target = tempfile.mkdtemp(prefix="taps_cagg_") + "/hourly"
+    target = scratch("taps_cagg_") + "/hourly"
 
     def upsert_partials(batch_df: DataFrame, epoch_id: int) -> None:
         # Re-aggregate the batch to partial grain (a batch may carry

@@ -235,45 +235,31 @@ def stream_state_ttl_twin(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from taps_spark.io.tables import load_table
-
-    import shutil
-    import tempfile
-
+    from taps_spark.io.tables import load_table, scratch
     from taps_spark.streaming.jobs import STREAM_PYTHON_STATE_PARTITIONS
 
-    # A fresh split per call: the input is re-read every time, and the
-    # split is removed once the stream has drained it into memory.
-    src = tempfile.mkdtemp(prefix="taps_ttl_twin_")
-    try:
-        ev = load_table(spark, sf_dir, "events").select(
-            "user_id",
-            F.datediff(F.to_date("ts"), F.lit("1970-01-01").cast("date")).alias(
-                "day"
-            ),
-            F.floor(F.col("value") * 1000000 + F.lit(0.5))
-            .cast("long")
-            .alias("q"),
-            (F.col("event_id") % n_files).alias("_b"),
-        )
-        ev.repartition(n_files, "_b").drop("_b").write.mode("overwrite").parquet(src)
-        raw = (
-            spark.readStream.schema("user_id bigint, day int, q bigint")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        updates = raw.groupBy("user_id").applyInPandasWithState(
-            _ttl_twin_update,
-            outputStructType=TTL_TWIN_OUTPUT_SCHEMA,
-            stateStructType=TTL_TWIN_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        tbl = run_to_memory(
-            updates, "update", state_partitions=STREAM_PYTHON_STATE_PARTITIONS
-        )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+    # A fresh split per call: the input is re-read every time.
+    src = scratch("taps_ttl_twin_")
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id",
+        F.datediff(F.to_date("ts"), F.lit("1970-01-01").cast("date")).alias("day"),
+        F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long").alias("q"),
+        (F.col("event_id") % n_files).alias("_b"),
+    )
+    ev.repartition(n_files, "_b").drop("_b").write.mode("overwrite").parquet(src)
+    raw = (
+        spark.readStream.schema("user_id bigint, day int, q bigint")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    updates = raw.groupBy("user_id").applyInPandasWithState(
+        _ttl_twin_update,
+        outputStructType=TTL_TWIN_OUTPUT_SCHEMA,
+        stateStructType=TTL_TWIN_STATE_SCHEMA,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    tbl = run_to_memory(updates, "update", state_partitions=STREAM_PYTHON_STATE_PARTITIONS)
     w = Window.partitionBy("user_id")
     return (
         tbl.withColumn("_m", F.max("seq").over(w))

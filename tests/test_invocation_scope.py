@@ -1,7 +1,8 @@
 """No result crosses invocations: a query re-reads its input on every
-call (a file rewritten in place under the same path is seen afresh)
-and leaves nothing behind in Spark's CacheManager, nor any block once
-its barriers are released."""
+call (a file rewritten in place under the same path, or another input
+dir with the same name, is seen afresh) and leaves nothing behind in
+Spark's CacheManager, nor any block or scratch dir once it is
+released."""
 
 from __future__ import annotations
 
@@ -9,11 +10,14 @@ import hashlib
 import json
 import os
 import shutil
+import tempfile
 
 import pytest
 
-from taps_spark.io.tables import release
+from taps_spark.io.tables import release, table_path
 from taps_spark.queries import REGISTRY, _load
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _result_hash(spark, name: str, sf_dir: str) -> str:
@@ -55,6 +59,27 @@ def test_lsh_query_rereads_input_rewritten_in_place(spark, sf_dir, tmp_path, nam
     assert second != first
 
 
+@pytest.mark.parametrize("name", ["scan_python_datasource", "transfer_stream_pull"])
+def test_same_named_input_dirs_are_read_apart(spark, sf_dir, tmp_path, name):
+    """Two input dirs with the same basename, the second holding half
+    of the first's orders: the run on the second leaves nothing that
+    stands in for the first's source."""
+    import pyarrow.parquet as pq
+
+    orders = pq.read_table(table_path(sf_dir, "orders"))
+    a, b = tmp_path / "a" / "sf", tmp_path / "b" / "sf"
+    for d, t in ((a, orders), (b, orders.slice(0, orders.num_rows // 2))):
+        d.mkdir(parents=True)
+        pq.write_table(t, str(d / "orders.parquet"))
+    on_b = _result_hash(spark, name, str(b))
+    on_a = _result_hash(spark, name, str(a))
+
+    unique = tmp_path / "unique_a"
+    shutil.copytree(a, unique)
+    assert on_a == _result_hash(spark, name, str(unique))
+    assert on_a != on_b
+
+
 @pytest.mark.parametrize(
     "name",
     [
@@ -64,11 +89,19 @@ def test_lsh_query_rereads_input_rewritten_in_place(spark, sf_dir, tmp_path, nam
         "events_stream_tumbling",
         "graph_kcore",
         "dedup_connected_components",
+        "events_stream_foreach_batch",
+        "events_stream_continuous_rollup",
+        "transfer_stream_pull",
+        "scan_python_datasource",
     ],
 )
-def test_query_leaves_cache_manager_empty(spark, sf_dir, name):
+def test_query_leaves_cache_manager_empty(spark, sf_dir, tmp_path, monkeypatch, name):
     _load()
     spark.catalog.clearCache()
+    # A temp root of this test's own, so no other process's dirs count.
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    repo_scratch = os.path.join(ROOT, ".scratch")
+    in_repo = set(os.listdir(repo_scratch)) if os.path.isdir(repo_scratch) else set()
     REGISTRY[name].fn(spark, sf_dir).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     # Its barriers hold no block once released.
@@ -76,6 +109,28 @@ def test_query_leaves_cache_manager_empty(spark, sf_dir, name):
     assert [i.name() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()] == []
     # A stream query's memory sink leaves no view in the session catalog.
     assert not [t.name for t in spark.catalog.listTables() if t.name.startswith("taps_stream_sink_")]
+    # Nor any temp dir, nor a file in the repo.
+    assert [e for e in os.listdir(tmp_path) if e.startswith("taps_")] == []
+    if os.path.isdir(repo_scratch):
+        assert set(os.listdir(repo_scratch)) <= in_repo
+
+
+def test_releasing_a_stream_dir_keeps_the_files_it_links(tmp_path, monkeypatch):
+    """A stream's source view is symlinks to the table's part files:
+    removing the view removes the links, never the table."""
+    from taps_spark.streaming.jobs import _as_stream_dir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    os.makedirs(tempfile.tempdir)
+    events = tmp_path / "sf" / "events.parquet"
+    events.mkdir(parents=True)
+    for i in range(2):
+        (events / f"part-{i}.parquet").write_bytes(b"x")
+    view = _as_stream_dir(str(tmp_path / "sf"))
+    assert sorted(os.listdir(view)) == ["part0.parquet", "part1.parquet"]
+    release()
+    assert not os.path.exists(view)
+    assert sorted(os.listdir(events)) == ["part-0.parquet", "part-1.parquet"]
 
 
 def test_stream_query_rereads_schema_rewritten_in_place(spark, sf_dir, tmp_path):
