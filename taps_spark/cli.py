@@ -307,7 +307,6 @@ def _run_repair(args: argparse.Namespace) -> int:
             os.path.join(local.root, f"{table}.parquet"),
             pk_cols[0],
             chunk_rows=args.chunk_rows,
-            spark=spark,
         )
         report[table] = {
             "damaged_chunks": res.n_damaged_chunks,

@@ -74,8 +74,9 @@ def plan_jdbc_scan(
 
     Sizing: partitions ≈ n_rows / target_rows_per_partition, clamped
     to [1, max_partitions] — the static analog of the reference's
-    adaptive chunk sizing (transfer/chunking.py holds the adaptive
-    controller math for the fetchsize feedback loop).
+    adaptive chunk sizing. Nothing adapts fetchsize at run time
+    (transfer/chunking.ChunkSizer ports the reference controller's
+    math, but no transfer path calls it).
     """
     if stats.pk is None or stats.pk_min is None or stats.pk_max is None:
         return JdbcScanPlan(
@@ -321,13 +322,9 @@ class JdbcEndpoint:
 
         meter = ProgressMeter()
         write_jdbc(
-            meter.instrument(f"__jdbc_{table}", df),
-            self.url,
-            table,
-            mode="append",
-            batchsize=self.batchsize,
+            meter.instrument(df), self.url, table, mode="append", batchsize=self.batchsize
         )
-        return meter.harvest(f"__jdbc_{table}")
+        return meter.harvest()
 
     def apply_ddl(self, spark: SparkSession, *statements: str) -> None:
         execute_jdbc_sql(spark, self.url, *statements)

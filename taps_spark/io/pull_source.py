@@ -94,7 +94,10 @@ class SqlitePullDataSource(DataSource):
         return SqlitePullStreamReader(self.options, schema)
 
 
-class SqlitePullReader(DataSourceReader):
+class _KeysetReader:
+    """What the batch and stream readers share: the options check, the
+    plan-time keyset planner and the executor-side chunk read."""
+
     def __init__(self, options, schema: StructType) -> None:
         self.path = options["path"]
         self.table = options["table"]
@@ -103,11 +106,83 @@ class SqlitePullReader(DataSourceReader):
         self.schema = schema
         if self.pk not in schema.fieldNames():
             raise ValueError(f"pk column {self.pk!r} not in table {self.table!r}")
-        # pk bounds absorbed from pushed filters: lo is (value, inclusive)
-        self._lo: tuple[int, bool] | None = None
-        self._hi: tuple[int, bool] | None = None
 
-    # -- pushdown ---------------------------------------------------
+    def _connect(self):
+        """A read-only connection that `with` closes."""
+        import sqlite3
+        from contextlib import closing
+
+        return closing(sqlite3.connect(f"file:{self.path}?mode=ro", uri=True))
+
+    def _where(self, lo: int | None, hi: int | None) -> tuple[str, list]:
+        """`pk >= lo AND pk < hi`, a None bound left open."""
+        conds, args = ["1=1"], []
+        if lo is not None:
+            conds.append(f'"{self.pk}" >= ?')
+            args.append(lo)
+        if hi is not None:
+            conds.append(f'"{self.pk}" < ?')
+            args.append(hi)
+        return " AND ".join(conds), args
+
+    # -- planning (driver) ------------------------------------------
+
+    def _plan(self, lo: int | None, hi: int | None) -> list[KeysetRange]:
+        """Split the half-open pk range [lo, hi) into keyset chunks.
+
+        Exact boundaries: the pk of every chunk_rows-th row in key
+        order. One indexed scan at plan time; value-skew in the key
+        space cannot unbalance the chunks (unlike JDBC's numPartitions
+        value-range striping). The chunks tile [lo, hi) exactly, and
+        an empty range is still one (empty) chunk.
+        """
+        where, args = self._where(lo, hi)
+        q = (
+            f'SELECT "{self.pk}" FROM (SELECT "{self.pk}", ROW_NUMBER() OVER '
+            f'(ORDER BY "{self.pk}") AS rn FROM "{self.table}" WHERE {where}) '
+            f"WHERE rn % {self.chunk_rows} = 1 AND rn > 1"
+        )
+        with self._connect() as con:
+            bounds = [r[0] for r in con.execute(q, args).fetchall()]
+        edges = [lo, *bounds, hi]
+        return [KeysetRange(a, b) for a, b in zip(edges, edges[1:])]
+
+    # -- execution (one partition per executor task) -----------------
+
+    def read(self, partition: KeysetRange):
+        """`SELECT cols WHERE pk >= lo AND pk < hi ORDER BY pk`,
+        yielded as Arrow RecordBatches."""
+        import pyarrow as pa
+
+        where, args = self._where(partition.lo, partition.hi)
+        names = self.schema.fieldNames()
+        pa_types = [
+            pa.int64()
+            if isinstance(f.dataType, LongType)
+            else pa.float64()
+            if isinstance(f.dataType, DoubleType)
+            else pa.string()
+            for f in self.schema.fields
+        ]
+        cols = ", ".join(f'"{n}"' for n in names)
+        with self._connect() as con:
+            cur = con.execute(
+                f'SELECT {cols} FROM "{self.table}" WHERE {where} ORDER BY "{self.pk}"',
+                args,
+            )
+            while rows := cur.fetchmany(4096):
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array([r[i] for r in rows], type=pa_types[i]) for i in range(len(names))],
+                    names=names,
+                )
+
+
+class SqlitePullReader(_KeysetReader, DataSourceReader):
+    def __init__(self, options, schema: StructType) -> None:
+        super().__init__(options, schema)
+        # half-open pk bounds [lo, hi) absorbed from pushed filters
+        self._lo: int | None = None
+        self._hi: int | None = None
 
     def pushFilters(self, filters: list[Filter]):  # noqa: N802 (API name)
         # Eager (no generator): partition planning depends on the
@@ -115,152 +190,39 @@ class SqlitePullReader(DataSourceReader):
         # Spark calls partitions(), however it consumes the result.
         unhandled: list[Filter] = []
         for f in filters:
-            if getattr(f, "attribute", None) != (self.pk,) or not isinstance(
-                getattr(f, "value", None), int
-            ):
+            v = getattr(f, "value", None)
+            if getattr(f, "attribute", None) != (self.pk,) or not isinstance(v, int):
                 unhandled.append(f)  # not a pk comparison — Spark keeps it
                 continue
-            if isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                cand = (f.value, isinstance(f, GreaterThanOrEqual))
-                if self._lo is None or cand[0] > self._lo[0]:
-                    self._lo = cand
-            elif isinstance(f, (LessThan, LessThanOrEqual)):
-                cand = (f.value, isinstance(f, LessThanOrEqual))
-                if self._hi is None or cand[0] < self._hi[0]:
-                    self._hi = cand
-            elif isinstance(f, EqualTo):
-                self._lo = (f.value, True)
-                self._hi = (f.value, True)
-            else:
+            lo, hi = {
+                GreaterThan: (v + 1, None),
+                GreaterThanOrEqual: (v, None),
+                LessThan: (None, v),
+                LessThanOrEqual: (None, v + 1),
+                EqualTo: (v, v + 1),
+            }.get(type(f), (None, None))
+            if lo is None and hi is None:
                 unhandled.append(f)
+                continue
+            if lo is not None and (self._lo is None or lo > self._lo):
+                self._lo = lo
+            if hi is not None and (self._hi is None or hi < self._hi):
+                self._hi = hi
         return unhandled
 
-    def _range_where(self) -> tuple[str, list]:
-        conds, args = [], []
-        if self._lo is not None:
-            conds.append(f'"{self.pk}" {">=" if self._lo[1] else ">"} ?')
-            args.append(self._lo[0])
-        if self._hi is not None:
-            conds.append(f'"{self.pk}" {"<=" if self._hi[1] else "<"} ?')
-            args.append(self._hi[0])
-        return (" AND ".join(conds) or "1=1"), args
-
-    # -- planning (driver) ------------------------------------------
-
     def partitions(self):
-        import sqlite3
-
-        where, args = self._range_where()
-        # Exact keyset boundaries: the pk of every chunk_rows-th row in
-        # key order. One indexed scan at plan time; value-skew in the
-        # key space cannot unbalance the chunks (unlike JDBC's
-        # numPartitions value-range striping).
-        q = (
-            f'SELECT "{self.pk}" FROM (SELECT "{self.pk}", ROW_NUMBER() OVER '
-            f'(ORDER BY "{self.pk}") AS rn FROM "{self.table}" WHERE {where}) '
-            f"WHERE rn % {self.chunk_rows} = 1 AND rn > 1"
-        )
-        with sqlite3.connect(self.path) as con:
-            bounds = [r[0] for r in con.execute(q, args).fetchall()]
-        edges = [None, *bounds, None]
-        return [KeysetRange(lo, hi) for lo, hi in zip(edges, edges[1:])]
-
-    # -- execution (one partition per executor task) -----------------
-
-    def read(self, partition: KeysetRange):
-        import sqlite3
-
-        import pyarrow as pa
-
-        where, args = self._range_where()
-        if partition.lo is not None:
-            where += f' AND "{self.pk}" >= ?'
-            args = [*args, partition.lo]
-        if partition.hi is not None:
-            where += f' AND "{self.pk}" < ?'
-            args = [*args, partition.hi]
-        cols = ", ".join(f'"{n}"' for n in self.schema.fieldNames())
-        con = sqlite3.connect(f"file:{self.path}?mode=ro", uri=True)
-        try:
-            cur = con.execute(
-                f'SELECT {cols} FROM "{self.table}" WHERE {where} ORDER BY "{self.pk}"',
-                args,
-            )
-            names = self.schema.fieldNames()
-            pa_types = [
-                pa.int64()
-                if isinstance(f.dataType, LongType)
-                else pa.float64()
-                if isinstance(f.dataType, DoubleType)
-                else pa.string()
-                for f in self.schema.fields
-            ]
-            while True:
-                rows = cur.fetchmany(4096)
-                if not rows:
-                    break
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array([r[i] for r in rows], type=pa_types[i])
-                        for i in range(len(names))
-                    ],
-                    names=names,
-                )
-        finally:
-            con.close()
+        return self._plan(self._lo, self._hi)
 
 
-def _read_keyset_range(path, table, pk, schema, lo, hi):
-    """Executor-side chunk read shared by the batch and stream readers:
-    `SELECT cols WHERE pk >= lo AND pk < hi ORDER BY pk`, yielded as
-    Arrow RecordBatches (bounds None → unbounded)."""
-    import sqlite3
-
-    import pyarrow as pa
-
-    where, args = "1=1", []
-    if lo is not None:
-        where += f' AND "{pk}" >= ?'
-        args.append(lo)
-    if hi is not None:
-        where += f' AND "{pk}" < ?'
-        args.append(hi)
-    cols = ", ".join(f'"{n}"' for n in schema.fieldNames())
-    con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
-    try:
-        cur = con.execute(
-            f'SELECT {cols} FROM "{table}" WHERE {where} ORDER BY "{pk}"', args
-        )
-        names = schema.fieldNames()
-        pa_types = [
-            pa.int64()
-            if isinstance(f.dataType, LongType)
-            else pa.float64()
-            if isinstance(f.dataType, DoubleType)
-            else pa.string()
-            for f in schema.fields
-        ]
-        while True:
-            rows = cur.fetchmany(4096)
-            if not rows:
-                break
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([r[i] for r in rows], type=pa_types[i]) for i in range(len(names))],
-                names=names,
-            )
-    finally:
-        con.close()
-
-
-class SqlitePullStreamReader(DataSourceStreamReader):
+class SqlitePullStreamReader(_KeysetReader, DataSourceStreamReader):
     """Continuous replication — the reference's serve/pull loop
     (lib/taps/operation.rb pull cycle re-polled by the caller) as a
     Structured Streaming source with exactly-once semantics.
 
     Offset = the max pk replicated so far ({"pk": n}); a micro-batch
-    covers the half-open keyset range (start, end]. Requirements, same
-    as the reference's resume protocol: integer pk, append-only
-    monotonic writes (updates/deletes need the CDC path,
+    covers the keyset range (start, end], i.e. [start + 1, end + 1).
+    Requirements, same as the reference's resume protocol: integer pk,
+    append-only monotonic writes (updates/deletes need the CDC path,
     io/sinks.merge_apply_changes).
 
     Exactly-once: offsets live in the query checkpoint; partitions()
@@ -269,72 +231,30 @@ class SqlitePullStreamReader(DataSourceStreamReader):
     needed at the sink. A restarted query resumes from the
     checkpointed offset and ships only rows the source grew since.
 
-    Scale: each micro-batch is keyset-chunked exactly like the batch
-    reader (every chunk_rows-th pk within the range, one indexed
-    plan-time scan), so a large catch-up batch fans out across the
-    cluster instead of trickling through one cursor — the reference
-    pulls 1,000 rows/s on one connection; this pulls every chunk in
+    Scale: each micro-batch is keyset-chunked by the batch reader's
+    planner, so a large catch-up batch fans out across the cluster
+    instead of trickling through one cursor — the reference pulls
+    1,000 rows/s on one connection; this pulls every chunk in
     parallel.
     """
 
-    def __init__(self, options, schema: StructType) -> None:
-        self.path = options["path"]
-        self.table = options["table"]
-        self.pk = options["pk"]
-        self.chunk_rows = int(options.get("chunk_rows", "10000"))
-        self.schema = schema
-        if self.pk not in schema.fieldNames():
-            raise ValueError(f"pk column {self.pk!r} not in table {self.table!r}")
-
-    def _max_pk(self):
-        import sqlite3
-
-        with sqlite3.connect(f"file:{self.path}?mode=ro", uri=True) as con:
-            row = con.execute(
-                f'SELECT MAX("{self.pk}") FROM "{self.table}"'
-            ).fetchone()
-        return row[0]
+    def _pk_agg(self, fn: str):
+        with self._connect() as con:
+            return con.execute(f'SELECT {fn}("{self.pk}") FROM "{self.table}"').fetchone()[0]
 
     def initialOffset(self) -> dict:
-        import sqlite3
-
-        with sqlite3.connect(f"file:{self.path}?mode=ro", uri=True) as con:
-            row = con.execute(
-                f'SELECT MIN("{self.pk}") FROM "{self.table}"'
-            ).fetchone()
+        mn = self._pk_agg("MIN")
         # Start just below the smallest existing pk so a fresh query
         # replicates the whole table; empty table → 0 (first rows > 0
         # arrive in later batches; sqlite rowids start at 1).
-        return {"pk": (row[0] - 1) if row[0] is not None else 0}
+        return {"pk": (mn - 1) if mn is not None else 0}
 
     def latestOffset(self) -> dict:
-        mx = self._max_pk()
+        mx = self._pk_agg("MAX")
         return {"pk": mx} if mx is not None else {"pk": 0}
 
     def partitions(self, start: dict, end: dict):
-        import sqlite3
-
-        s, e = start["pk"], end["pk"]
-        if e <= s:
-            return [KeysetRange(s + 1, s + 1)]  # empty advance
-        # Keyset chunk boundaries within (s, e] — same guarantee as the
-        # batch planner: ~chunk_rows rows per partition regardless of
-        # key-space skew.
-        q = (
-            f'SELECT "{self.pk}" FROM (SELECT "{self.pk}", ROW_NUMBER() OVER '
-            f'(ORDER BY "{self.pk}") AS rn FROM "{self.table}" '
-            f'WHERE "{self.pk}" > ? AND "{self.pk}" <= ?) '
-            f"WHERE rn % {self.chunk_rows} = 1 AND rn > 1"
-        )
-        with sqlite3.connect(f"file:{self.path}?mode=ro", uri=True) as con:
-            bounds = [r[0] for r in con.execute(q, (s, e)).fetchall()]
-        edges = [s + 1, *bounds, e + 1]
-        return [KeysetRange(lo, hi) for lo, hi in zip(edges, edges[1:])]
-
-    def read(self, partition: KeysetRange):
-        yield from _read_keyset_range(
-            self.path, self.table, self.pk, self.schema, partition.lo, partition.hi
-        )
+        return self._plan(start["pk"] + 1, end["pk"] + 1)
 
     def commit(self, end: dict) -> None:
         pass  # offsets are checkpoint-managed; nothing to clean up

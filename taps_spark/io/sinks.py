@@ -14,6 +14,8 @@ Reference parity:
 
 from __future__ import annotations
 
+import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -74,19 +76,19 @@ def append_idempotent(
     file even for an empty frame, and a replayed append must leave the
     target's file listing unchanged.
     """
-    meter, name = ProgressMeter(), f"append_{uuid.uuid4().hex}"
+    meter = ProgressMeter()
     target = _read_parquet_if_exists(spark, path)
     if target is None:
-        write_parquet(meter.instrument(name, df), path, codec=codec)
-        return meter.harvest(name)
+        write_parquet(meter.instrument(df), path, codec=codec)
+        return meter.harvest()
 
     out = df.join(target.select(*key_cols), key_cols, "left_anti")
     fs, root = _fs_path(spark, path)
     Path = spark._jvm.org.apache.hadoop.fs.Path
-    staging = Path(root, f"_{name}")
+    staging = Path(root, f"_append_{uuid.uuid4().hex}")
     try:
-        write_parquet(meter.instrument(name, out), staging.toString(), codec=codec)
-        n = meter.harvest(name)
+        write_parquet(meter.instrument(out), staging.toString(), codec=codec)
+        n = meter.harvest()
         if n:
             for st in fs.listStatus(staging):
                 src = st.getPath()
@@ -122,6 +124,21 @@ def write_jdbc(
     )
 
 
+def _staged_swap(df: DataFrame, path: str) -> None:
+    """Replace the parquet dir at `path` with `df`: write a sibling
+    `__staging` dir, then move the target aside, move the stage in and
+    remove the old files (writing in place would read and overwrite the
+    same files)."""
+    staged = path.rstrip("/") + "__staging"
+    write_parquet(df, staged, mode="overwrite")
+    old = path.rstrip("/") + "__old"
+    shutil.move(path, old)
+    shutil.move(staged, path)
+    shutil.rmtree(old)
+    if not os.path.isdir(path):  # defensive; move must have landed
+        raise IOError(f"staged swap failed for {path}")
+
+
 def merge_upsert(
     spark: SparkSession, updates: DataFrame, path: str, key_cols: list[str]
 ) -> dict[str, int]:
@@ -139,9 +156,6 @@ def merge_upsert(
 
     Returns {"updated": n, "inserted": n}.
     """
-    import os
-    import shutil
-
     existing = _read_parquet_if_exists(spark, path)
     if existing is None:
         write_parquet(updates, path, mode="overwrite")
@@ -153,14 +167,7 @@ def merge_upsert(
     n_survivors = survivors.count()
     merged = survivors.unionByName(updates)
 
-    staged = path.rstrip("/") + "__staging"
-    write_parquet(merged, staged, mode="overwrite")
-    old = path.rstrip("/") + "__old"
-    shutil.move(path, old)
-    shutil.move(staged, path)
-    shutil.rmtree(old)
-    if not os.path.isdir(path):  # defensive; move must have landed
-        raise IOError(f"merge_upsert: target swap failed for {path}")
+    _staged_swap(merged, path)
     return {
         "updated": n_existing - n_survivors,
         "inserted": updates.count() - (n_existing - n_survivors),
@@ -293,9 +300,6 @@ def merge_apply_changes(
     change batch shuffles; use merge_upsert_partitioned's
     partition-pruned shape for partitioned targets.
     """
-    import os
-    import shutil
-
     if seq_col is not None:
         from pyspark.sql import Window
 
@@ -329,12 +333,5 @@ def merge_apply_changes(
     n_inserted = upserts.count() - n_updated
     merged = survivors.unionByName(upserts)
 
-    staged = path.rstrip("/") + "__staging"
-    write_parquet(merged, staged, mode="overwrite")
-    old = path.rstrip("/") + "__old"
-    shutil.move(path, old)
-    shutil.move(staged, path)
-    shutil.rmtree(old)
-    if not os.path.isdir(path):
-        raise IOError(f"merge_apply_changes: target swap failed for {path}")
+    _staged_swap(merged, path)
     return {"deleted": n_deleted, "updated": n_updated, "inserted": n_inserted}

@@ -7,12 +7,12 @@ The reference tunes rows-per-request toward a 0.8-1.1 s round trip:
 (lib/taps/chunksize.rb:17-51, lib/taps/utils.rb:97-115,
 lib/taps/data_stream.rb:89-106; spec'd in spec/chunksize_spec.rb).
 
-In the Spark engine this controller governs the per-executor JDBC
-`fetchsize`/`batchsize` knobs between retries of a connector job —
-Spark's AQE already adapts the shuffle side, but JDBC endpoints are
-static per attempt, so the feedback loop still earns its keep there.
-The math is reimplemented from the documented behavior (not a code
-port) and pinned by tests mirroring the reference spec.
+This is a tested port of the reference controller that no transfer
+path uses: Spark's AQE adapts the shuffle side, and JDBC reads and
+writes run with the static `fetchsize`/`batchsize` that
+io/jdbc.plan_jdbc_scan and JdbcEndpoint set. The math is
+reimplemented from the documented behavior (not a copy of its code) and
+pinned by tests mirroring the reference spec.
 """
 
 from __future__ import annotations

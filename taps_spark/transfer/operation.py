@@ -14,12 +14,12 @@ validated → idempotent append (rows counted by an observed metric
 during the write) → checksum-verified against that same source frame
 (transfer/verify: one aggregate over both sides); only a verified
 table lands in the resume manifest. A keyed parquet table new to the
-target costs five Spark jobs: the source's schema inference, the
-write, the target's schema inference and the two-job digest (a rerun
-adds the target's key read and the anti-join). Endpoints are abstracted
-as `Endpoint`s — a parquet directory (testable everywhere) or a live
-JDBC database (io/jdbc.JdbcEndpoint: partitioned keyset reads,
-batched writes, real DDL execution).
+target costs three Spark jobs: the write and the two-job digest (each
+side's parquet schema comes from one footer read on the driver, no
+job; a rerun adds the anti-join's read of the target's keys).
+Endpoints are abstracted as `Endpoint`s — a parquet directory
+(testable everywhere) or a live JDBC database (io/jdbc.JdbcEndpoint:
+partitioned keyset reads, batched writes, real DDL execution).
 
 Mid-table resume (reference cursor parity, data_stream.rb:15-25):
 with `chunk_rows` set and a declared integer PK, the data phase
@@ -48,6 +48,7 @@ from taps_spark.io import sinks
 from taps_spark.io.jdbc import create_index_sql, reset_sequence_sql
 from taps_spark.io.sources import read_parquet
 from taps_spark.transfer.manifest import TransferManifest
+from taps_spark.transfer.progress import ProgressMeter
 from taps_spark.transfer.verify import verify_or_raise
 from taps_spark.validation import Rule, enforce
 
@@ -59,7 +60,10 @@ class Endpoint(Protocol):
 
     def read(self, spark: SparkSession, table: str) -> DataFrame: ...
 
-    def write(self, spark: SparkSession, table: str, df: DataFrame, key_cols: list[str] | None) -> int: ...
+    def write(self, spark: SparkSession, table: str, df: DataFrame, key_cols: list[str] | None) -> int:
+        """Land `df` (keyed: only rows whose key is new) and return the
+        row count observed during the write."""
+        ...
 
 
 @dataclass
@@ -93,8 +97,9 @@ class ParquetEndpoint:
             return sinks.append_idempotent(
                 spark, df, self._path(table), key_cols, codec=self.codec
             )
-        df.write.mode("append").option("compression", self.codec).parquet(self._path(table))
-        return -1
+        meter = ProgressMeter()
+        sinks.write_parquet(meter.instrument(df), self._path(table), codec=self.codec)
+        return meter.harvest()
 
 
 @dataclass
@@ -245,14 +250,12 @@ class TransferOperation:
 
         The source is read once: the data plane and verify share the
         frame (one listing and schema inference, one JDBC plan)."""
-        from taps_spark.transfer.progress import ProgressMeter
-
         source = self.source.read(spark, table)
         pk = self._single_int_pk(table)
         if self.chunk_rows and pk is not None:
             n = self._transfer_chunked(spark, table, source, pk)
         else:
-            n = self._transfer_whole(spark, table, source, ProgressMeter())
+            n = self._transfer_whole(spark, table, source)
         if self.verify:
             # CorruptedData propagates: the table is left out of the
             # manifest, and the next (idempotent) run repairs it.
@@ -264,17 +267,12 @@ class TransferOperation:
         cols = self.key_cols.get(table)
         return cols[0] if cols and len(cols) == 1 else None
 
-    def _transfer_whole(self, spark: SparkSession, table: str, df: DataFrame, meter) -> int:
+    def _transfer_whole(self, spark: SparkSession, table: str, df: DataFrame) -> int:
         if table in self.rules:
             df = enforce(df, self.rules[table])
-        # Meter rows during the write itself (§2a-23 parity) —
-        # no separate count job; see transfer/progress.py.
-        n = self.target.write(
-            spark, table, meter.instrument(table, df), self.key_cols.get(table)
-        )
-        if n < 0:
-            n = meter.harvest(table)
-        return n
+        # The endpoint meters rows during the write itself (§2a-23
+        # parity): no separate count job; see transfer/progress.py.
+        return self.target.write(spark, table, df, self.key_cols.get(table))
 
     def _transfer_chunked(self, spark: SparkSession, table: str, df: DataFrame, pk: str) -> int:
         """Chunked data plane with a per-chunk manifest watermark.
@@ -311,8 +309,7 @@ class TransferOperation:
         for chunk_lo in range(lo, hi + 1, step):
             chunk_hi = min(chunk_lo + step - 1, hi)
             part = df.filter((F.col(pk) >= chunk_lo) & (F.col(pk) <= chunk_hi))
-            n = self.target.write(spark, table, part, self.key_cols.get(table))
-            total += max(n, 0)
+            total += self.target.write(spark, table, part, self.key_cols.get(table))
             # Watermark AFTER the chunk landed: a crash between write
             # and flush only re-runs one idempotent chunk.
             self.manifest.set_watermark(table, chunk_hi)

@@ -2,11 +2,12 @@
 taps' per-table progress bar, lib/taps/progress_bar.rb + usage in
 lib/taps/operation.rb:262-286, driven by rows-per-chunk increments).
 
-Spark-native realization: `DataFrame.observe` attaches named
-aggregates that the executors compute WHILE the write action runs —
-exact rows/bytes moved per table with zero extra scans, where the
-reference needed a count(*) round trip up front and per-chunk
-arithmetic after.
+Spark-native realization: `DataFrame.observe` attaches a row count
+that the executors compute WHILE the write action runs — the exact
+rows each write moved, with zero extra scans, where the reference
+needed a count(*) round trip up front and per-chunk arithmetic after.
+Every endpoint write (transfer/operation.Endpoint) returns the count
+its own meter observed.
 
 Scale: observe metrics piggyback on the action's own tasks (an
 AccumulatorV2 under the hood), so metering cost is O(1) per task at
@@ -15,31 +16,22 @@ any data size — never a second pass.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
-@dataclass
 class ProgressMeter:
-    """Collects per-table row counts observed during write actions."""
+    """One row-count observation: `instrument` attaches it to the frame
+    whose action (a write) runs next, `harvest` reads it afterwards.
+    The observation is unnamed, so Spark gives each meter its own
+    unique name and concurrent writes never share a metric."""
 
-    rows: dict[str, int] = field(default_factory=dict)
-    _pending: dict[str, Observation] = field(default_factory=dict)
+    def __init__(self) -> None:
+        self._obs = Observation()
 
-    def instrument(self, table: str, df: DataFrame) -> DataFrame:
-        """Attach a row-count observation to `df`; the metric
-        materializes when the caller's action (write) runs."""
-        obs = Observation(f"transfer_{table}")
-        self._pending[table] = obs
-        return df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    def instrument(self, df: DataFrame) -> DataFrame:
+        return df.observe(self._obs, F.count(F.lit(1)).alias("rows"))
 
-    def harvest(self, table: str) -> int:
-        """Read the observed row count after the action completed."""
-        obs = self._pending.pop(table, None)
-        if obs is None:
-            return -1
-        n = int(obs.get["rows"])
-        self.rows[table] = n
-        return n
+    def harvest(self) -> int:
+        """The observed row count; call only after the action ran."""
+        return int(self._obs.get["rows"])

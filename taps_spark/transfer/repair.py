@@ -9,19 +9,20 @@ module closes the loop the scalable way:
       → repair (ship ONLY missing source rows from those chunks)
         → verify (checksum equality, transfer/verify.compare)
 
-Chunk audit compares per-chunk row counts AND order-insensitive
-row-hash digests (xxhash64 xor/sum lanes, the same construction as
-transfer/verify.compare), so it catches missing rows and corrupted
-values alike. Everything shuffles (chunk_id, count, hash) triples —
-|table|/chunk_rows rows of three longs — never the data itself.
+Chunk audit is transfer/verify.digest keyed by chunk id: per-chunk
+row counts AND order-insensitive row-hash lanes (xor and sum) on
+each side, so it catches missing rows and corrupted values alike.
+The digest's shuffle carries partial aggregates, at most one row per
+(side, chunk) per map task, never the data itself.
 
-Repair ships `source ⋉ damaged-chunks ▷ dest-keys`: a broadcast
-semi-join on the (small) damaged-chunk set restricts the source scan,
-and a left-anti join on the pk removes rows the destination already
-holds, so the append is idempotent even when a chunk is only
-partially damaged. With a clustered/partitioned destination layout
-(io/layout.write_clustered) the pk-range predicate also prunes the
-destination scan to the damaged ranges.
+Repair ships `source ⋉ damaged-chunks`, a broadcast semi-join on the
+(small) damaged-chunk set that restricts the source scan, and lands
+it through io/sinks.append_idempotent, whose anti-join on the pk
+drops rows the destination already holds: the append is idempotent
+even when a chunk is only partially damaged. With a
+clustered/partitioned destination layout (io/layout.write_clustered)
+the pk-range predicate also prunes the destination scan to the
+damaged ranges.
 """
 
 from __future__ import annotations
@@ -31,25 +32,13 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from taps_spark.io import sinks
 from taps_spark.io.sources import read_parquet
+from taps_spark.transfer.verify import digest
 
 
-def _chunk_digest(df: DataFrame, pk: str, chunk_rows: int) -> DataFrame:
-    """Per-chunk fingerprint: (chunk_id, n_rows, xor_hash, sum_hash)
-    over a row hash of every column. Map-side combinable; output is
-    |table|/chunk_rows rows."""
-    row_h = F.xxhash64(*[F.col(c) for c in df.columns])
-    return (
-        df.select(F.expr(f"{pk} DIV {chunk_rows}").alias("chunk_id"), row_h.alias("h"))
-        .groupBy("chunk_id")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.aggregate(F.collect_list("h"), F.lit(0).cast("long"), lambda a, x: a.bitwiseXOR(x)).alias(
-                "xor_hash"
-            ),
-            F.sum(F.col("h").cast("decimal(38,0)")).alias("sum_hash"),
-        )
-    )
+def _chunk_id(pk: str, chunk_rows: int):
+    return F.expr(f"{pk} DIV {chunk_rows}")
 
 
 def audit_chunks(
@@ -58,37 +47,28 @@ def audit_chunks(
     """Chunks where the two sides disagree (missing rows, extra rows,
     or corrupted values), as DataFrame[chunk_id, src_rows, dst_rows].
 
-    One digest aggregation per side, one full-outer join on chunk_id.
+    One digest aggregate over both sides keyed by chunk id, then one
+    per-chunk pivot of its (side, chunk) rows.
     """
-    s = _chunk_digest(source, pk, chunk_rows).select(
-        "chunk_id",
-        F.col("n_rows").alias("src_rows"),
-        F.col("xor_hash").alias("src_xor"),
-        F.col("sum_hash").alias("src_sum"),
+    d = digest(source, dest, keys={"chunk_id": _chunk_id(pk, chunk_rows)})
+
+    def side(c: str, s: int):
+        return F.max(F.when(F.col("side") == s, F.col(c)))
+
+    per_chunk = d.groupBy("chunk_id").agg(
+        F.coalesce(side("n_rows", 0), F.lit(0)).alias("src_rows"),
+        F.coalesce(side("n_rows", 1), F.lit(0)).alias("dst_rows"),
+        side("xor_hash", 0).alias("src_xor"),
+        side("xor_hash", 1).alias("dst_xor"),
+        side("sum_hash", 0).alias("src_sum"),
+        side("sum_hash", 1).alias("dst_sum"),
     )
-    d = _chunk_digest(dest, pk, chunk_rows).select(
-        "chunk_id",
-        F.col("n_rows").alias("dst_rows"),
-        F.col("xor_hash").alias("dst_xor"),
-        F.col("sum_hash").alias("dst_sum"),
-    )
-    j = s.join(d, "chunk_id", "full_outer")
     damaged = (
-        F.col("dst_rows").isNull()
-        | F.col("src_rows").isNull()
-        | (F.col("src_rows") != F.col("dst_rows"))
-        | (F.col("src_xor") != F.col("dst_xor"))
-        | (F.col("src_sum") != F.col("dst_sum"))
+        (F.col("src_rows") != F.col("dst_rows"))
+        | ~F.col("src_xor").eqNullSafe(F.col("dst_xor"))
+        | ~F.col("src_sum").eqNullSafe(F.col("dst_sum"))
     )
-    return (
-        j.filter(damaged)
-        .select(
-            "chunk_id",
-            F.coalesce("src_rows", F.lit(0)).alias("src_rows"),
-            F.coalesce("dst_rows", F.lit(0)).alias("dst_rows"),
-        )
-        .orderBy("chunk_id")
-    )
+    return per_chunk.filter(damaged).select("chunk_id", "src_rows", "dst_rows")
 
 
 @dataclass(frozen=True)
@@ -98,16 +78,13 @@ class RepairResult:
 
 
 def repair_missing_rows(
-    source: DataFrame,
-    dest_path: str,
-    pk: str,
-    chunk_rows: int = 1024,
-    spark=None,
+    source: DataFrame, dest_path: str, pk: str, chunk_rows: int = 1024
 ) -> RepairResult:
     """Append to the parquet destination exactly the source rows that
-    are missing from damaged chunks. Idempotent: rows the destination
-    already holds are anti-joined out, so re-running after a partial
-    repair ships only what is still absent.
+    are missing from damaged chunks. Idempotent: the keyed landing
+    (io/sinks.append_idempotent) drops rows the destination already
+    holds, so re-running after a partial repair ships only what is
+    still absent.
 
     Returns the damaged-chunk count and rows shipped. Corrupted (as
     opposed to missing) destination rows are NOT deleted here —
@@ -116,16 +93,19 @@ def repair_missing_rows(
     path for the dominant failure (lost chunks from an interrupted
     transfer).
     """
-    spark = spark or source.sparkSession
+    spark = source.sparkSession
     dest = read_parquet(spark, dest_path)
-    damaged = audit_chunks(source, dest, pk, chunk_rows).select("chunk_id")
-    src_chunk = F.expr(f"{pk} DIV {chunk_rows}").alias("chunk_id")
-    candidates = source.withColumn("chunk_id", src_chunk).join(
-        F.broadcast(damaged), "chunk_id", "left_semi"
+    # The damaged ids reach the driver once: a broadcast collects them
+    # there anyway, and the landing then reads a local relation instead
+    # of re-running the audit.
+    ids = [(r["chunk_id"],) for r in audit_chunks(source, dest, pk, chunk_rows).collect()]
+    if not ids:
+        return RepairResult(n_damaged_chunks=0, n_rows_shipped=0)
+    damaged = spark.createDataFrame(ids, "chunk_id long")
+    rows = (
+        source.withColumn("chunk_id", _chunk_id(pk, chunk_rows))
+        .join(F.broadcast(damaged), "chunk_id", "left_semi")
+        .select(*dest.columns)
     )
-    missing = candidates.join(dest.select(pk), pk, "left_anti").drop("chunk_id")
-    n_damaged = damaged.count()
-    n_ship = missing.count()
-    if n_ship:
-        missing.select(*dest.columns).write.mode("append").parquet(dest_path)
-    return RepairResult(n_damaged_chunks=n_damaged, n_rows_shipped=n_ship)
+    n_ship = sinks.append_idempotent(spark, rows, dest_path, [pk])
+    return RepairResult(n_damaged_chunks=len(ids), n_rows_shipped=n_ship)

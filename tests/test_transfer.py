@@ -421,22 +421,33 @@ def test_merge_apply_changes_deletes_updates_inserts(spark, tmp_path):
     assert again == got
 
 
+#: Rows a damaged orders replica lacks: two whole 256-row chunks plus
+#: scattered rows.
+_REPAIR_HOLE = "o_orderkey % 97 = 13 OR o_orderkey DIV 256 IN (2, 3)"
+
+
+def _orders_replica(spark, sf_dir, path, damaged=True, reverse=False):
+    """Write a parquet replica of three orders columns to `path`,
+    missing the `_REPAIR_HOLE` rows when `damaged`, with its columns
+    reversed when `reverse`; return the source frame."""
+    source = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    replica = source.filter(f"NOT ({_REPAIR_HOLE})") if damaged else source
+    cols = source.columns[::-1] if reverse else source.columns
+    replica.select(*cols).write.parquet(path)
+    return source
+
+
 def test_chunk_repair_ships_only_missing_rows(spark, sf_dir, tmp_path):
     """audit → repair → verify: delete two whole chunks plus scattered
     rows from a parquet replica, repair from source, end checksum-equal
     — and the repair ships exactly the deleted rows, not the table."""
-    from taps_spark.io.tables import load_table
     from taps_spark.transfer.repair import audit_chunks, repair_missing_rows
     from taps_spark.transfer.verify import compare
 
-    source = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
     dest_path = str(tmp_path / "orders_replica")
-    damaged_pred = (
-        "NOT (o_orderkey % 97 = 13 OR o_orderkey DIV 256 IN (2, 3))"
-    )
-    source.filter(damaged_pred).write.parquet(dest_path)
+    source = _orders_replica(spark, sf_dir, dest_path)
 
     dest = spark.read.parquet(dest_path)
     n_deleted = source.count() - dest.count()
@@ -455,6 +466,33 @@ def test_chunk_repair_ships_only_missing_rows(spark, sf_dir, tmp_path):
     # Idempotent: a second repair finds nothing to ship.
     res2 = repair_missing_rows(source, dest_path, "o_orderkey", chunk_rows=256)
     assert res2.n_damaged_chunks == 0 and res2.n_rows_shipped == 0
+
+
+def test_chunk_repair_reads_replica_columns_by_name(spark, sf_dir, tmp_path):
+    """A replica written with its columns in another order digests
+    like the source: intact, it audits clean and repairs nothing;
+    damaged, it flags the same chunks and ships the same rows as a
+    same-order replica."""
+    from taps_spark.transfer.repair import RepairResult, audit_chunks, repair_missing_rows
+    from taps_spark.transfer.verify import compare
+
+    def chunks(source, path):
+        audit = audit_chunks(source, spark.read.parquet(path), "o_orderkey", chunk_rows=256)
+        return {r["chunk_id"] for r in audit.collect()}
+
+    intact, same, rev = (str(tmp_path / d) for d in ("intact", "same", "rev"))
+    source = _orders_replica(spark, sf_dir, intact, damaged=False, reverse=True)
+    assert chunks(source, intact) == set()
+    res = repair_missing_rows(source, intact, "o_orderkey", chunk_rows=256)
+    assert res == RepairResult(0, 0)
+
+    _orders_replica(spark, sf_dir, same)
+    _orders_replica(spark, sf_dir, rev, reverse=True)
+    assert chunks(source, rev) == chunks(source, same) != set()
+    res_same = repair_missing_rows(source, same, "o_orderkey", chunk_rows=256)
+    res_rev = repair_missing_rows(source, rev, "o_orderkey", chunk_rows=256)
+    assert res_rev == res_same and res_rev.n_rows_shipped > 0
+    assert compare(source, spark.read.parquet(rev)).ok
 
 
 def test_merge_upsert_partitioned_null_partition_survivors(spark, tmp_path):
@@ -551,7 +589,9 @@ def test_replayed_append_leaves_target_files_unchanged(spark, sf_dir, target_dir
 def test_transfer_job_counts(spark, sf_dir, tmp_path):
     """Job counts are deterministic, so pin them: a fresh keyed,
     verified parquet table is the write + the two-job digest; the rerun
-    adds the anti-join's broadcast. Nothing stays cached."""
+    adds the anti-join's broadcast. A chunk repair is the keyed digest
+    and its pivot, then the landing; a clean one ships nothing. Nothing
+    stays cached."""
     a = spark.read.parquet(f"{sf_dir}/orders.parquet")
     b = spark.read.parquet(f"{sf_dir}/orders.parquet")
     j = _next_job_id(spark)
@@ -576,6 +616,24 @@ def test_transfer_job_counts(spark, sf_dir, tmp_path):
     assert n > 0 and jobs <= 3
     n, jobs = pull("rerun.json")
     assert n == 0 and jobs <= 4
+    assert _cached_rdd_ids(spark) <= cached
+
+    # Repair: the chunk digest, then the keyed landing of the damaged
+    # chunks' rows; a clean rerun is the digest alone.
+    from taps_spark.transfer.repair import repair_missing_rows
+
+    path = str(tmp_path / "replica")
+    source = _orders_replica(spark, sf_dir, path)
+
+    def repair():
+        j = _next_job_id(spark)
+        r = repair_missing_rows(source, path, "o_orderkey", chunk_rows=256)
+        return r.n_rows_shipped, _next_job_id(spark) - j
+
+    n, jobs = repair()
+    assert n > 0 and jobs <= 6
+    n, jobs = repair()
+    assert n == 0 and jobs <= 3
     assert _cached_rdd_ids(spark) <= cached
 
 
