@@ -1,14 +1,19 @@
 """Vector similarity search over ArrayType(FloatType) embeddings.
 
-Two paths:
-- brute-force cosine top-k: exact baseline; broadcast the (small)
-  query set against the full corpus — one pass over the candidates,
-  per-query top-k via window. Linear in corpus size.
-- LSH-bucketed ANN (random hyperplanes): the scale path — sign-bit
-  bucket per vector, candidates only within the query's bucket. One
-  shuffle on the bucket key; corpus never cross-joins the query set.
+Three kernels; every blocker is one of them plus its candidate key:
+- `topk_bruteforce`, the one cosine top-k: broadcast the (small)
+  query set, join it to the corpus on `on`, drop self-pairs, score
+  with `cosine`, keep each query's top-k map-side (`_topk_reduce`).
+  `on` is the blocker: None for the exact baseline (every row), a
+  metadata predicate for filtered ANN, "bucket" for hyperplane LSH
+  (`topk_lsh`), "centroid_id" for the IVF probe lists (`topk_ivf`).
+- `train_ivf_centroids`, the one Lloyd trainer, and
+- `assign_nearest_centroid`, the one map-side argmin. Both take
+  optional group keys: IVF (`ivf_index`) and `semantic_dedup` train
+  one codebook, PQ (`topk_pq`) trains one per subspace `s` in the
+  same loop.
 
-Cosine math is pure column expressions (zip_with + aggregate fold in
+Vector math is pure column expressions (zip_with + aggregate fold in
 doubles, left-to-right — the same order the DuckDB oracle uses), so
 everything stays in whole-stage codegen; no UDFs.
 """
@@ -34,8 +39,22 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(da, db) / F.sqrt(dot(da, da) * dot(db, db))
 
 
-def _topk_reduce(scored: DataFrame, qid_col: str, id_col: str, k: int) -> DataFrame:
-    """Exact per-query top-k over a scored (qid, id, _score) frame.
+def _d2(a: Column, b: Column) -> Column:
+    """Squared L2 distance of two array<double> columns."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda acc, x: acc + x
+    )
+
+
+def l2_normalize(vec: Column) -> Column:
+    """Unit-L2 scaling (cosine becomes plain inner product)."""
+    dv = as_double(vec)
+    n = F.sqrt(dot(dv, dv))
+    return F.transform(dv, lambda x: x / n)
+
+
+def _topk_reduce(scored: DataFrame, k: int) -> DataFrame:
+    """Exact per-query top-k over a scored (q_id, vec_id, _score) frame.
 
     Expressed as row_number-over-window + rank filter ON PURPOSE:
     Spark ≥3.5 compiles this to WindowGroupLimit in Partial mode
@@ -48,13 +67,13 @@ def _topk_reduce(scored: DataFrame, qid_col: str, id_col: str, k: int) -> DataFr
     WindowGroupLimit(Partial) shape so a regression (or a Spark
     behavior change) fails CI rather than melting at corpus scale.
     """
-    w = Window.partitionBy(qid_col).orderBy(F.col("_score").desc(), F.col(id_col))
+    w = Window.partitionBy("q_id").orderBy(F.col("_score").desc(), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            qid_col,
-            F.col(id_col).alias("neighbor_id"),
+            "q_id",
+            F.col("vec_id").alias("neighbor_id"),
             F.round("_score", 4).alias("score"),
             F.col("rank").alias("rank"),
         )
@@ -62,31 +81,25 @@ def _topk_reduce(scored: DataFrame, qid_col: str, id_col: str, k: int) -> DataFr
 
 
 def topk_bruteforce(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "q_id",
-    qvec_col: str = "q_vec",
+    emb: DataFrame, queries: DataFrame, k: int = 5, on: Column | str | None = None
 ) -> DataFrame:
-    """Exact cosine top-k: every query against every candidate.
+    """Exact cosine top-k of each query (q_id, q_vec) among the corpus
+    rows (vec_id, embedding) that the join condition `on` pairs it
+    with: None pairs every row, a Column is a predicate, a name an
+    equi-join key both sides carry.
 
-    Scale: broadcast(queries) × corpus — the corpus is scanned once;
-    the scored pairs reduce map-side via WindowGroupLimit(Partial)
-    (see _topk_reduce), so the shuffle carries ≤ k×partitions rows
-    per query, never the whole candidate set.
+    Scale: broadcast(queries) × corpus — the corpus is scanned once,
+    and `on` prunes candidates inside the broadcast join probe, before
+    any distance math; the scored pairs reduce map-side via
+    WindowGroupLimit(Partial) (see _topk_reduce), so the shuffle
+    carries ≤ k×partitions rows per query, never the candidate set.
     """
     scored = (
-        emb.join(F.broadcast(queries))
-        .filter(F.col(id_col) != F.col(qid_col))
-        .select(
-            F.col(qid_col),
-            F.col(id_col),
-            cosine(F.col(qvec_col), F.col(vec_col)).alias("_score"),
-        )
+        emb.join(F.broadcast(queries), on)
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .select("q_id", "vec_id", cosine(F.col("q_vec"), F.col("embedding")).alias("_score"))
     )
-    return _topk_reduce(scored, qid_col, id_col, k)
+    return _topk_reduce(scored, k)
 
 
 def hyperplane_bucket(vec: Column, num_planes: int = 8, dim: int = 64) -> Column:
@@ -115,67 +128,71 @@ def hyperplane_bucket(vec: Column, num_planes: int = 8, dim: int = 64) -> Column
     return bucket
 
 
-def train_ivf_centroids(
-    emb: DataFrame,
-    nlist: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+def topk_lsh(
+    emb: DataFrame, queries: DataFrame, k: int = 5, num_planes: int = 8, dim: int = 64
 ) -> DataFrame:
-    """Deterministic k-means-lite (Lloyd) centroid training, pure
-    DataFrame ops — the coarse quantizer of an IVF index.
+    """Approximate top-k: exact cosine but only within the query's
+    hyperplane bucket.
 
-    Init = the nlist lowest-id vectors (reproducible across engines
-    and runs; no RNG). Each iteration: assign every vector to its
-    nearest centroid (broadcast centroids, argmin via min(struct)),
-    then recompute centroids as element-wise means (posexplode →
-    per-(centroid, dim) avg → re-assemble array).
+    Scale: corpus bucketed once (map-only), equi-join on bucket id
+    replaces the cross join — with 2^planes buckets the candidate set
+    per query drops by that factor; AQE handles bucket skew.
+    """
+    cand = emb.withColumn("bucket", hyperplane_bucket(F.col("embedding"), num_planes, dim))
+    qb = queries.withColumn("bucket", hyperplane_bucket(F.col("q_vec"), num_planes, dim))
+    return topk_bruteforce(cand, qb, k, on="bucket")
+
+
+def train_ivf_centroids(
+    dv: DataFrame, k: int = 16, iters: int = 2, keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """Deterministic k-means-lite (Lloyd) over dv[_id, *keys, v
+    array<double>], one k-way codebook per `keys` group, all groups in
+    one loop (plan depth is O(iters), not O(groups × iters)).
+
+    Init = the k lowest-id vectors of each group, numbered 1..k
+    (reproducible across engines and runs; no RNG). They are ranked
+    by a row_number window whose rank limit Spark runs map-side (a
+    per-partition top-k before the one ranking), inside the first
+    codebook broadcast — no driver round trip. Each iteration:
+    assign every vector to its nearest centroid
+    (assign_nearest_centroid), then recompute the centroids as
+    element-wise means (posexplode → per-(centroid, dim) avg →
+    re-assemble array).
 
     Scale: at 100 TB you train on a ~1M-row sample (centroids
-    converge on a sample; `emb.sample(frac)` upstream) so each Lloyd
+    converge on a sample; `dv.sample(frac)` upstream) so each Lloyd
     iteration is minutes, then assign the full corpus ONCE. Returns
-    DataFrame[centroid_id int, cv array<double>].
+    DataFrame[*keys, centroid_id int, cv array<double>].
     """
     # Materialize the training vectors only when more than one Lloyd
     # iteration will re-read them (at scale this frame is a SAMPLE —
-    # docstring). At iters=1 the frame is read exactly twice (seed scan
-    # + one assign), and a second column-pruned parquet scan costs less
-    # than holding the corpus in blocks.
-    dv = emb.select(
-        F.col(id_col).alias("_id"), as_double(F.col(vec_col)).alias("v")
-    )
+    # docstring). At iters=1 the frame is read exactly twice (seed
+    # rank + one assign), and a second column-pruned parquet scan
+    # costs less than holding the corpus in blocks.
     if iters > 1:
         dv = materialize(dv)
-    # Rank the nlist seed vectors WITHOUT a global unpartitioned
-    # window (that pattern serializes on one reducer as nlist grows):
-    # ONE TakeOrdered job collects the nlist lowest-id rows to the
-    # driver (the codebook is driver-resident in every k-means
-    # implementation — MLlib keeps its centers exactly like this) and
-    # the 1-based rank falls out of the already-sorted order. The
-    # previous spelling (seed-id collect_list agg + broadcast join
-    # back onto the orderBy/limit subtree) re-executed the corpus
-    # TakeOrdered once per consumer — two extra scans per training
-    # run (guide §1.2).
-    seed_rows = dv.orderBy("_id").limit(nlist).collect()
-    cents = dv.sparkSession.createDataFrame(
-        [(i + 1, list(r["v"])) for i, r in enumerate(seed_rows)],
-        "centroid_id int, cv array<double>",
+    seed = Window.partitionBy(*keys).orderBy("_id")
+    cents = (
+        dv.withColumn("centroid_id", F.row_number().over(seed))
+        .filter(F.col("centroid_id") <= k)
+        .select(*keys, "centroid_id", F.col("v").alias("cv"))
     )
     for _ in range(iters):
-        assigned = assign_nearest_centroid(dv, cents, vec_col="v")
         cents = (
-            assigned.select("centroid_id", F.posexplode("v").alias("pos", "x"))
-            .groupBy("centroid_id", "pos")
+            assign_nearest_centroid(dv, cents, keys)
+            .select(*keys, "centroid_id", F.posexplode("v").alias("pos", "x"))
+            .groupBy(*keys, "centroid_id", "pos")
             .agg(F.avg("x").alias("x"))
-            .groupBy("centroid_id")
+            .groupBy(*keys, "centroid_id")
             .agg(
                 F.transform(
                     F.array_sort(F.collect_list(F.struct("pos", "x"))), lambda s: s["x"]
                 ).alias("cv")
             )
-            # The codebook is nlist rows; every later iteration (and
-            # the final corpus assign) broadcasts it, and without a
-            # materialization each broadcast build re-executes the
+            # The codebook is k rows per group; every later iteration
+            # (and the final corpus assign) broadcasts it, and without
+            # a materialization each broadcast build re-executes the
             # whole Lloyd chain from the scan — plan-depth recompute,
             # not data volume, dominated training wall time.
             .transform(materialize)
@@ -183,37 +200,59 @@ def train_ivf_centroids(
     return cents
 
 
-def assign_nearest_centroid(dv: DataFrame, cents: DataFrame, vec_col: str = "v") -> DataFrame:
-    """Nearest centroid per vector by L2 — ZERO-shuffle: the (tiny)
-    centroid table collapses to a single broadcast row holding all
-    centroids as an array of structs, and the argmin is a per-row
-    column expression (array_min over (dist, id) structs — ties break
-    on centroid_id, so assignment is deterministic).
+def assign_nearest_centroid(
+    dv: DataFrame, cents: DataFrame, keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """Nearest centroid of each dv row's `v` by L2, among the
+    centroids of its `keys` group; dv's columns plus centroid_id.
 
-    This replaces the earlier join+groupBy formulation: that one
-    re-shuffled the whole corpus (with its vectors) on every Lloyd
-    iteration just to take the argmin; map-side argmin makes
-    assignment embarrassingly parallel, which is what you want when
-    the corpus is 100 TB and assignment runs once per iteration plus
-    once at index-build time."""
-    other = [c for c in dv.columns if c != vec_col]
-    cents_row = cents.agg(
+    ZERO-shuffle: each group's (tiny) codebook collapses to a single
+    broadcast row holding its centroids as an array of structs, and
+    the argmin is a per-row column expression (array_min over (d²,
+    centroid_id) structs — ties break on centroid_id, so assignment is
+    deterministic). A join + groupBy argmin would re-shuffle the whole
+    corpus with its vectors on every Lloyd iteration; the map-side
+    argmin is embarrassingly parallel."""
+    book = cents.groupBy(*keys).agg(
         F.collect_list(F.struct("centroid_id", "cv")).alias("_cents")
-    )
-    d2 = lambda c: F.aggregate(  # noqa: E731
-        F.zip_with(F.col(vec_col), c["cv"], lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
     )
     best = F.array_min(
         F.transform(
             F.col("_cents"),
-            lambda c: F.struct(d2(c).alias("d"), c["centroid_id"].alias("c")),
+            lambda c: F.struct(_d2(F.col("v"), c["cv"]).alias("d"), c["centroid_id"].alias("c")),
         )
     )
+    return dv.join(F.broadcast(book), list(keys) or None).select(
+        *dv.columns, best.getField("c").alias("centroid_id")
+    )
+
+
+def ivf_index(emb: DataFrame, nlist: int = 16, iters: int = 2) -> tuple[DataFrame, DataFrame]:
+    """The IVF index: the trained coarse quantizer (centroid_id, cv)
+    and the corpus (vec_id, embedding as doubles, centroid_id) assigned
+    to it — the inverted lists, keyed by centroid_id.
+
+    Scale: the corpus is assigned once (map-only after training) and
+    in production is WRITTEN partitioned by centroid_id, so a search
+    reads only its probes' lists (partition pruning on the key)."""
+    dv = emb.select(F.col("vec_id").alias("_id"), as_double(F.col("embedding")).alias("v"))
+    cents = train_ivf_centroids(dv, nlist, iters)
+    corpus = assign_nearest_centroid(dv, cents).select(
+        F.col("_id").alias("vec_id"), F.col("v").alias("embedding"), "centroid_id"
+    )
+    return cents, corpus
+
+
+def ivf_probes(queries: DataFrame, cents: DataFrame) -> DataFrame:
+    """Every (query, centroid) pair: q_id, q_vec, centroid_id and the
+    probe rank `_pr` (1 = nearest centroid by L2, ties on centroid_id).
+    Filter `_pr <= nprobe` for a query's probe lists."""
+    w = Window.partitionBy("q_id").orderBy(F.col("_d"), F.col("centroid_id"))
+    d = _d2(as_double(F.col("q_vec")), F.col("cv"))
     return (
-        dv.join(F.broadcast(cents_row))
-        .select(*other, vec_col, best.getField("c").alias("centroid_id"))
+        queries.join(F.broadcast(cents))
+        .select("q_id", "q_vec", "centroid_id", d.alias("_d"))
+        .withColumn("_pr", F.row_number().over(w))
     )
 
 
@@ -224,208 +263,23 @@ def topk_ivf(
     nlist: int = 16,
     nprobe: int = 4,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "q_id",
-    qvec_col: str = "q_vec",
 ) -> DataFrame:
     """IVF approximate top-k: exact cosine, but only against the
     inverted lists of the query's nprobe nearest centroids.
 
-    Scale: the corpus is assigned once (map-only after training) and
-    in production would be WRITTEN partitioned by centroid_id —
-    searches then touch nprobe/nlist of the data (partition pruning
-    on the centroid key). Candidates reach each query via an
-    equi-join on centroid_id, never a cross join. nprobe/nlist is the
-    recall/cost dial: nprobe=nlist degenerates to brute force.
+    Scale: candidates reach each query via an equi-join on
+    centroid_id, never a cross join; with the index stored partitioned
+    by centroid_id a search touches nprobe/nlist of the data.
+    nprobe/nlist is the recall/cost dial: nprobe=nlist degenerates to
+    brute force.
     """
-    cents = train_ivf_centroids(emb, nlist=nlist, iters=iters, id_col=id_col, vec_col=vec_col)
-    corpus = assign_nearest_centroid(
-        emb.select(F.col(id_col), as_double(F.col(vec_col)).alias("v")).withColumnRenamed(
-            id_col, "_id"
-        ),
-        cents,
-    ).select(F.col("_id").alias(id_col), "v", "centroid_id")
-
-    qv = queries.select(F.col(qid_col), as_double(F.col(qvec_col)).alias("qv"))
-    d2 = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wprobe = Window.partitionBy(qid_col).orderBy(F.col("_d"), F.col("centroid_id"))
+    cents, corpus = ivf_index(emb, nlist, iters)
     probes = (
-        qv.join(F.broadcast(cents))
-        .select(qid_col, "qv", F.col("centroid_id"), d2.alias("_d"))
-        .withColumn("_pr", F.row_number().over(wprobe))
+        ivf_probes(queries, cents)
         .filter(F.col("_pr") <= nprobe)
-        .select(qid_col, "qv", "centroid_id")
+        .select("q_id", "q_vec", "centroid_id")
     )
-    scored = (
-        corpus.join(F.broadcast(probes), "centroid_id")
-        .filter(F.col(id_col) != F.col(qid_col))
-        .select(
-            F.col(qid_col),
-            F.col(id_col),
-            (dot(F.col("qv"), F.col("v")) / F.sqrt(dot(F.col("qv"), F.col("qv")) * dot(F.col("v"), F.col("v")))).alias("_score"),
-        )
-    )
-    return _topk_reduce(scored, qid_col, id_col, k)
-
-
-def topk_lsh(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    num_planes: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "q_id",
-    qvec_col: str = "q_vec",
-) -> DataFrame:
-    """Approximate top-k: exact cosine but only within the query's
-    hyperplane bucket.
-
-    Scale: corpus bucketed once (map-only), equi-join on bucket id
-    replaces the cross join — with 2^planes buckets the candidate set
-    per query drops by that factor; AQE handles bucket skew.
-    """
-    cand = emb.withColumn("bucket", hyperplane_bucket(F.col(vec_col), num_planes, dim))
-    qb = queries.withColumn("bucket", hyperplane_bucket(F.col(qvec_col), num_planes, dim))
-    scored = (
-        cand.join(F.broadcast(qb), "bucket")
-        .filter(F.col(id_col) != F.col(qid_col))
-        .select(
-            F.col(qid_col),
-            F.col(id_col),
-            cosine(F.col(qvec_col), F.col(vec_col)).alias("_score"),
-        )
-    )
-    return _topk_reduce(scored, qid_col, id_col, k)
-
-
-def l2_normalize(vec: Column) -> Column:
-    """Unit-L2 scaling (cosine becomes plain inner product)."""
-    dv = as_double(vec)
-    n = F.sqrt(dot(dv, dv))
-    return F.transform(dv, lambda x: x / n)
-
-
-def train_pq_codebooks(
-    emb: DataFrame,
-    m: int = 8,
-    ksub: int = 16,
-    dim: int = 64,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Product-quantization codebooks: the vector is split into `m`
-    contiguous subvectors and each subspace gets its own `ksub`-way
-    k-means codebook — all `m` codebooks train TOGETHER in one keyed
-    Lloyd loop (subspace id is part of every group key), so plan
-    depth is O(iters), not O(m × iters).
-
-    Same determinism contract as train_ivf_centroids: seeds are the
-    ksub lowest-id vectors (no RNG), argmin ties break on centroid
-    id. Input vectors are unit-normalized first so the asymmetric
-    inner product approximates cosine.
-
-    Scale: PQ is the memory dial for ANN at 100 TB — a 64-dim float
-    vector (256 B) compresses to m=8 one-byte codes, a 32× shrink,
-    so a 10-billion-vector index fits executor memory for rerank.
-    Train on a sample upstream (like IVF); encode is one broadcast
-    join + argmin over the full corpus.
-
-    Returns DataFrame[s int, centroid_id int, cv array<double>].
-    """
-    sub = dim // m
-    dv = emb.select(
-        F.col(id_col).alias("_id"), l2_normalize(F.col(vec_col)).alias("v")
-    )
-    # Materialize the training subvectors once — each Lloyd iteration
-    # consumes them twice (assign + recompute join) and would
-    # otherwise replay scan + normalize + posexplode per pass; at
-    # scale this is the training SAMPLE (docstring).
-    subs = dv.select(
-        "_id",
-        F.posexplode(
-            F.array(*[F.slice("v", s * sub + 1, sub) for s in range(m)])
-        ).alias("s", "sv"),
-    ).transform(materialize)
-    seed_ids = dv.orderBy("_id").limit(ksub).agg(
-        F.array_sort(F.collect_list("_id")).alias("_ids")
-    )
-    cents = (
-        subs.join(F.broadcast(seed_ids))
-        .filter(F.array_position(F.col("_ids"), F.col("_id")) > 0)
-        .select(
-            "s",
-            (F.array_position(F.col("_ids"), F.col("_id")) - 1).cast("int").alias("centroid_id"),
-            F.col("sv").alias("cv"),
-        )
-    )
-    for _ in range(iters):
-        # keep_sv: the recompute needs the subvectors, and the
-        # map-side assign can just carry them through — the previous
-        # shape joined the code assignments BACK onto subs, a second
-        # corpus×m-row shuffle join per Lloyd iteration on top of the
-        # one the old groupBy-argmin already paid (guide §2.4).
-        assigned = _assign_pq_codes(subs, cents, keep_sv=True)
-        cents = (
-            assigned
-            .select("s", "centroid_id", F.posexplode("sv").alias("pos", "x"))
-            .groupBy("s", "centroid_id", "pos")
-            .agg(F.avg("x").alias("x"))
-            .groupBy("s", "centroid_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "x"))), lambda t: t["x"]
-                ).alias("cv")
-            )
-            # m×ksub rows; materialize per iteration or every later
-            # broadcast build re-runs the whole Lloyd chain (see
-            # train_ivf_centroids).
-            .transform(materialize)
-        )
-    return cents
-
-
-def _assign_pq_codes(
-    subs: DataFrame, cents: DataFrame, keep_sv: bool = False
-) -> DataFrame:
-    """Per (vector, subspace) nearest codeword — ZERO-shuffle: the
-    m×ksub codebook collapses to one broadcast row of per-subspace
-    codeword lists, and the argmin is a per-row array_min over
-    (dist, centroid_id) structs — the same map-side shape as
-    assign_nearest_centroid. The previous spelling fanned subs×ksub
-    rows through a broadcast join and reduced them with a
-    groupBy(_id, s) min(struct), i.e. a full corpus×m-row exchange
-    per assignment pass (3 passes per PQ build at iters=2: train ×2
-    + final encode) — guide §2.4 'remove shuffles outright'.
-    min(struct) and array_min order structs identically
-    (lexicographic: distance, then centroid id), so ties and codes
-    are bit-identical."""
-    cents_row = cents.groupBy("s").agg(
-        F.collect_list(F.struct("centroid_id", "cv")).alias("_cw")
-    )
-    d2 = lambda c: F.aggregate(  # noqa: E731
-        F.zip_with(F.col("sv"), c["cv"], lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    best = F.array_min(
-        F.transform(
-            F.col("_cw"),
-            lambda c: F.struct(d2(c).alias("d"), c["centroid_id"].alias("c")),
-        )
-    )
-    out = ["_id", "s"] + (["sv"] if keep_sv else [])
-    return (
-        subs.join(F.broadcast(cents_row), "s")
-        .select(*out, best.getField("c").alias("centroid_id"))
-    )
+    return topk_bruteforce(corpus, probes, k, on="centroid_id")
 
 
 def topk_pq(
@@ -437,10 +291,6 @@ def topk_pq(
     dim: int = 64,
     iters: int = 2,
     rerank: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "q_id",
-    qvec_col: str = "q_vec",
 ) -> DataFrame:
     """PQ asymmetric-distance top-k (ADC) with exact rerank: corpus
     vectors live only as m small codes; each query precomputes an
@@ -453,68 +303,61 @@ def topk_pq(
     which recovers the recall pure ADC loses on unstructured
     embeddings. rerank=0 returns raw ADC scores.
 
-    Scale: the scored stream is corpus×m rows joined to a BROADCAST
-    lookup table (queries × m × ksub rows — a few thousand), summed
-    with map-side partial agg, then reduced by the same
+    Codebooks: each unit-normalized vector is split into `m`
+    contiguous subvectors, and each subspace `s` gets its own
+    `ksub`-way codebook — train_ivf_centroids keyed by `s`, so all m
+    train together; the encode is assign_nearest_centroid keyed the
+    same way.
+
+    Scale: PQ is the memory dial for ANN at 100 TB — a 64-dim float
+    vector (256 B) compresses to m=8 one-byte codes, a 32× shrink.
+    The scored stream is corpus×m rows joined to a BROADCAST lookup
+    table (queries × m × ksub rows — a few thousand), summed with
+    map-side partial agg, then reduced by the same
     WindowGroupLimit(Partial) top-k as brute force; the rerank join
     touches rerank×k rows per query. In production PQ composes with
     IVF (probe lists first, ADC within them); here it stands alone so
     the recall test isolates quantization loss.
     """
     sub = dim // m
-    cents = train_pq_codebooks(
-        emb, m=m, ksub=ksub, dim=dim, iters=iters, id_col=id_col, vec_col=vec_col
-    )
-    dv = emb.select(F.col(id_col).alias("_id"), l2_normalize(F.col(vec_col)).alias("v"))
-    subs = dv.select(
-        "_id",
-        F.posexplode(
-            F.array(*[F.slice("v", s * sub + 1, sub) for s in range(m)])
-        ).alias("s", "sv"),
-    )
-    codes = _assign_pq_codes(subs, cents)
 
-    qsubs = queries.select(
-        F.col(qid_col), l2_normalize(F.col(qvec_col)).alias("qv")
-    ).select(
-        qid_col,
-        F.posexplode(
-            F.array(*[F.slice("qv", s * sub + 1, sub) for s in range(m)])
-        ).alias("s", "qsv"),
-    )
+    def split(vec: str) -> Column:
+        return F.posexplode(F.array(*[F.slice(vec, s * sub + 1, sub) for s in range(m)]))
+
+    dv = emb.select(F.col("vec_id").alias("_id"), l2_normalize(F.col("embedding")).alias("v"))
+    subs = dv.select("_id", split("v").alias("s", "v"))
+    cents = train_ivf_centroids(subs, ksub, iters, keys=("s",))
+    codes = assign_nearest_centroid(subs, cents, keys=("s",))
+
+    qv = queries.select("q_id", l2_normalize(F.col("q_vec")).alias("qv"))
     # The ADC lookup table: partial inner product of every query
     # subvector with every codeword in its subspace.
-    lut = qsubs.join(F.broadcast(cents), "s").select(
-        qid_col, "s", "centroid_id", dot(F.col("qsv"), F.col("cv")).alias("_pip")
+    lut = (
+        qv.select("q_id", split("qv").alias("s", "qsv"))
+        .join(F.broadcast(cents), "s")
+        .select("q_id", "s", "centroid_id", dot(F.col("qsv"), F.col("cv")).alias("_pip"))
     )
     scored = (
         codes.join(F.broadcast(lut), ["s", "centroid_id"])
-        .filter(F.col("_id") != F.col(qid_col))
-        .groupBy(qid_col, "_id")
+        .filter(F.col("_id") != F.col("q_id"))
+        .groupBy("q_id", F.col("_id").alias("vec_id"))
         .agg(F.sum("_pip").alias("_score"))
-        .select(qid_col, F.col("_id").alias(id_col), "_score")
     )
     if not rerank:
-        return _topk_reduce(scored, qid_col, id_col, k)
-    shortlist = _topk_reduce(scored, qid_col, id_col, rerank * k).select(
-        qid_col, F.col("neighbor_id").alias(id_col)
+        return _topk_reduce(scored, k)
+    shortlist = _topk_reduce(scored, rerank * k).select(
+        "q_id", F.col("neighbor_id").alias("vec_id")
     )
-    qv = queries.select(F.col(qid_col), l2_normalize(F.col(qvec_col)).alias("qv"))
     exact = (
-        shortlist.join(dv.withColumnRenamed("_id", id_col), id_col)
-        .join(F.broadcast(qv), qid_col)
-        .select(qid_col, F.col(id_col), dot(F.col("qv"), F.col("v")).alias("_score"))
+        shortlist.join(dv.withColumnRenamed("_id", "vec_id"), "vec_id")
+        .join(F.broadcast(qv), "q_id")
+        .select("q_id", "vec_id", dot(F.col("qv"), F.col("v")).alias("_score"))
     )
-    return _topk_reduce(exact, qid_col, id_col, k)
+    return _topk_reduce(exact, k)
 
 
 def semantic_dedup(
-    emb: DataFrame,
-    threshold: float = 0.95,
-    nlist: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    emb: DataFrame, threshold: float = 0.95, nlist: int = 16, iters: int = 2
 ) -> DataFrame:
     """SemDeDup-shape semantic deduplication: k-means-cluster the
     embeddings (the IVF coarse quantizer reused as the blocker), then
@@ -537,11 +380,14 @@ def semantic_dedup(
     Returns DataFrame[vec_id, cluster_id, dropped bool, dup_of
     (lowest-id ≥threshold neighbor, NULL if kept)].
     """
-    dv = emb.select(F.col(id_col).alias("_id"), l2_normalize(F.col(vec_col)).alias("v"))
+    # Centroids train on the raw vectors; the unit-normalized ones are
+    # assigned to them and compared.
     cents = train_ivf_centroids(
-        emb.select(F.col(id_col), F.col(vec_col)), nlist=nlist, iters=iters,
-        id_col=id_col, vec_col=vec_col,
+        emb.select(F.col("vec_id").alias("_id"), as_double(F.col("embedding")).alias("v")),
+        nlist,
+        iters,
     )
+    dv = emb.select(F.col("vec_id").alias("_id"), l2_normalize(F.col("embedding")).alias("v"))
     # Three consumers below (both self-join sides + the final verdict
     # join); materialize the assignment once or the normalize+argmin
     # pipeline runs three times.
@@ -566,41 +412,9 @@ def semantic_dedup(
     return (
         assigned.join(near, "_id", "left")
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("vec_id"),
             "cluster_id",
             F.col("dup_of").isNotNull().alias("dropped"),
             "dup_of",
         )
     )
-
-
-def topk_metadata_filtered(
-    emb: DataFrame,
-    queries: DataFrame,
-    on: Column,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "q_id",
-    qvec_col: str = "q_vec",
-) -> DataFrame:
-    """Exact cosine top-k restricted by a metadata predicate (`on`,
-    evaluated as the broadcast-join condition, e.g. candidate label ==
-    query label).
-
-    The predicate joins BEFORE any distance math, so at scale the
-    filter prunes the candidate stream inside the broadcast hash join
-    probe — distances are only computed for rows that survive, which
-    is the point of filtered ANN (in production the corpus is also
-    partition-pruned by the same metadata column).
-    """
-    scored = (
-        emb.join(F.broadcast(queries), on)
-        .filter(F.col(id_col) != F.col(qid_col))
-        .select(
-            F.col(qid_col),
-            F.col(id_col),
-            cosine(F.col(qvec_col), F.col(vec_col)).alias("_score"),
-        )
-    )
-    return _topk_reduce(scored, qid_col, id_col, k)

@@ -10,6 +10,14 @@ from taps_spark.io.tables import load_tables, materialize
 from taps_spark.operators.similarity import topk_bruteforce, topk_ivf, topk_lsh
 from taps_spark.queries import query
 
+
+def _queries(emb: DataFrame, n: int) -> DataFrame:
+    """The query set: the corpus vectors with vec_id < n, as (q_id, q_vec)."""
+    return emb.filter(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    )
+
+
 TOPK_ORACLE = """
 WITH q AS (
   SELECT vec_id AS q_id, embedding::DOUBLE[] AS q_vec
@@ -43,9 +51,7 @@ def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside the window shuffle. Corpus-linear.
     """
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
+    queries = _queries(emb, 8)
     return topk_bruteforce(emb, queries, k=5).orderBy("q_id", "rank")
 
 
@@ -60,9 +66,7 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     query.
     """
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
+    queries = _queries(emb, 8)
     return topk_lsh(emb, queries, k=5, num_planes=8, dim=64).orderBy("q_id", "rank")
 
 
@@ -81,9 +85,7 @@ def similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force query.
     """
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
+    queries = _queries(emb, 8)
     return topk_ivf(emb, queries, k=5, nlist=16, nprobe=4, iters=1).orderBy("q_id", "rank")
 
 
@@ -247,9 +249,7 @@ def similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from taps_spark.operators.similarity import topk_pq
 
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
+    queries = _queries(emb, 8)
     return topk_pq(
         emb, queries, k=5, m=16, ksub=32, dim=64, iters=2, rerank=10
     ).orderBy("q_id", "rank")
@@ -466,9 +466,7 @@ def similarity_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from taps_spark.operators.similarity import _topk_reduce, as_double, dot
 
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
+    queries = _queries(emb, 8)
     scored = (
         emb.join(F.broadcast(queries))
         .filter(F.col("vec_id") != F.col("q_id"))
@@ -478,7 +476,7 @@ def similarity_mips_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             dot(as_double(F.col("q_vec")), as_double(F.col("embedding"))).alias("_score"),
         )
     )
-    return _topk_reduce(scored, "q_id", "vec_id", 5).orderBy("q_id", "rank")
+    return _topk_reduce(scored, 5).orderBy("q_id", "rank")
 
 
 LSH_RECALL_ORACLE = """
@@ -556,18 +554,9 @@ def similarity_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (band, bucket) equi-join. The report join touches 96 exact rows.
     """
     from taps_spark.operators.dedup import portable_band_buckets
-    from taps_spark.operators.similarity import _topk_reduce, cosine
 
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    queries = emb.filter(F.col("vec_id") < 32).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    scored = (
-        emb.join(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", cosine(F.col("q_vec"), F.col("embedding")).alias("_score"))
-    )
-    exact = _topk_reduce(scored, "q_id", "vec_id", 3).select("q_id", "neighbor_id")
+    exact = topk_bruteforce(emb, _queries(emb, 32), k=3).select("q_id", "neighbor_id")
 
     buckets = portable_band_buckets(emb, bands=4, planes=4).select("band", "bucket", "id")
     qb = buckets.filter(F.col("id") < 32).select(
@@ -841,12 +830,8 @@ def similarity_matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> Dat
     Determinism: identical dot-product fold order on both engines;
     rank ties break on vec_id; recall is an exact fifth.
     """
-    from taps_spark.operators.similarity import topk_bruteforce
-
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    full_q = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
+    full_q = _queries(emb, 8)
     pref_q = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"), F.slice("embedding", 1, 16).alias("q_vec")
     )
@@ -1377,8 +1362,6 @@ def similarity_knn_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFram
     """
     from pyspark.sql import Window
 
-    from taps_spark.operators.similarity import topk_bruteforce
-
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     queries = emb.filter(F.col("vec_id") < 100).select(
         F.col("vec_id").alias("q_id"),
@@ -1441,87 +1424,38 @@ def similarity_ivf_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe stages are the cheap parts); each sweep point joins
     candidates by centroid_id, never cross-joining the corpus.
     """
-    from taps_spark.operators.similarity import (
-        _topk_reduce,
-        as_double,
-        assign_nearest_centroid,
-        cosine,
-        dot,
-        train_ivf_centroids,
-    )
-    from pyspark.sql import Window
+    from taps_spark.operators.similarity import ivf_index, ivf_probes
 
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    queries = emb.filter(F.col("vec_id") < 32).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-
-    scored = (
-        emb.join(F.broadcast(queries))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            cosine(F.col("q_vec"), F.col("embedding")).alias("_score"),
-        )
-    )
+    queries = _queries(emb, 32)
     # Materialized so the brute-force ground-truth pass executes ONCE
     # and the 4 nprobe points read the 32x5-row result — without it
     # each sweep point replayed the whole broadcast-cosine corpus scan
     # (4 brute-force subtrees in the executed plan).
     exact = (
-        _topk_reduce(scored, "q_id", "vec_id", 5)
+        topk_bruteforce(emb, queries, k=5)
         .select("q_id", "neighbor_id")
         .transform(materialize)
     )
 
-    nlist = 16
-    cents = train_ivf_centroids(emb, nlist=nlist, iters=1)
+    cents, corpus = ivf_index(emb, nlist=16, iters=1)
     # Same dedup for the assignment pass (vec -> nearest centroid):
     # assigned once and shared by all 4 probe joins instead of
     # re-assigned per point. At serving scale this materialization IS
     # the IVF index (posting lists keyed by centroid), so checkpointing
     # it inside the build is the intended artifact shape, not an extra
     # copy.
-    corpus = assign_nearest_centroid(
-        emb.select("vec_id", as_double(F.col("embedding")).alias("v")).withColumnRenamed(
-            "vec_id", "_id"
-        ),
-        cents,
-    ).select(F.col("_id").alias("vec_id"), "v", "centroid_id").transform(materialize)
-    qv = queries.select("q_id", as_double(F.col("q_vec")).alias("qv"))
-    d2 = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wprobe = Window.partitionBy("q_id").orderBy(F.col("_d"), F.col("centroid_id"))
-    probe_ranked = (
-        qv.join(F.broadcast(cents))
-        .select("q_id", "qv", "centroid_id", d2.alias("_d"))
-        .withColumn("_pr", F.row_number().over(wprobe))
-    ).transform(materialize)
+    corpus = corpus.transform(materialize)
+    probe_ranked = ivf_probes(queries, cents).transform(materialize)
 
     out = None
     for nprobe in (1, 2, 4, 16):
         probes = probe_ranked.filter(F.col("_pr") <= nprobe).select(
-            "q_id", "qv", "centroid_id"
+            "q_id", "q_vec", "centroid_id"
         )
-        approx = _topk_reduce(
-            corpus.join(F.broadcast(probes), "centroid_id")
-            .filter(F.col("vec_id") != F.col("q_id"))
-            .select(
-                "q_id",
-                "vec_id",
-                (
-                    dot(F.col("qv"), F.col("v"))
-                    / F.sqrt(dot(F.col("qv"), F.col("qv")) * dot(F.col("v"), F.col("v")))
-                ).alias("_score"),
-            ),
-            "q_id",
-            "vec_id",
-            5,
-        ).select("q_id", "neighbor_id", F.lit(1).alias("hit"))
+        approx = topk_bruteforce(corpus, probes, k=5, on="centroid_id").select(
+            "q_id", "neighbor_id", F.lit(1).alias("hit")
+        )
         point = (
             exact.join(approx, ["q_id", "neighbor_id"], "left")
             .agg(
@@ -1676,9 +1610,7 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from taps_spark.operators.similarity import cosine
 
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    q = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
+    q = _queries(emb, 16)
     scored = (
         emb.join(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("q_id"))
@@ -1903,16 +1835,14 @@ def similarity_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     the filter column so the scan itself prunes. Same
     WindowGroupLimit map-side top-k as similarity_topk_bruteforce.
     """
-    from taps_spark.operators.similarity import topk_metadata_filtered
-
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"),
         F.col("label").alias("q_label"),
         F.col("embedding").alias("q_vec"),
     )
-    return topk_metadata_filtered(
-        emb, queries, on=F.col("label") == F.col("q_label"), k=5
+    return topk_bruteforce(
+        emb, queries, k=5, on=F.col("label") == F.col("q_label")
     ).orderBy("q_id", "rank")
 
 
@@ -2116,9 +2046,7 @@ def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from taps_spark.operators.similarity import cosine
 
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    queries = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
+    queries = _queries(emb, 8)
     s = (
         emb.join(F.broadcast(queries))
         .filter(F.col("vec_id") != F.col("q_id"))

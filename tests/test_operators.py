@@ -500,22 +500,12 @@ def test_ivf_partitioned_storage_prunes_probe_scan(spark, any_sf_dir, tmp_path):
     those partitions (PartitionFilters at planning time), which is
     the (nlist - nprobe)/nlist scan saving the operator docstring
     promises at 100 TB."""
-    from taps_spark.operators.similarity import (
-        as_double,
-        assign_nearest_centroid,
-        train_ivf_centroids,
-    )
+    from taps_spark.operators.similarity import ivf_index
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = train_ivf_centroids(emb, nlist=8, iters=1)
-    corpus = assign_nearest_centroid(
-        emb.select(F.col("vec_id").alias("_id"), as_double(F.col("embedding")).alias("v")),
-        cents,
-    )
+    _, corpus = ivf_index(emb, nlist=8, iters=1)
     path = str(tmp_path / "ivf_corpus")
-    corpus.withColumn("v", F.col("v").cast("array<double>")).write.partitionBy(
-        "centroid_id"
-    ).parquet(path)
+    corpus.write.partitionBy("centroid_id").parquet(path)
 
     probe = spark.read.parquet(path).filter(F.col("centroid_id").isin([1, 3]))
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
@@ -524,6 +514,55 @@ def test_ivf_partitioned_storage_prunes_probe_scan(spark, any_sf_dir, tmp_path):
     # Pruned read returns exactly the two lists' members.
     expected = corpus.filter(F.col("centroid_id").isin([1, 3])).count()
     assert probe.count() == expected > 0
+
+
+def test_keyed_lloyd_equals_keyless(spark, sf_dir):
+    """PQ trains its per-subspace codebooks through the keyed Lloyd
+    trainer and encodes through the keyed argmin; with one constant
+    key group both must reproduce the keyless (IVF) run exactly."""
+    from taps_spark.operators.similarity import (
+        as_double,
+        assign_nearest_centroid,
+        train_ivf_centroids,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    dv = emb.select(F.col("vec_id").alias("_id"), as_double(F.col("embedding")).alias("v"))
+    keyed = dv.select("_id", F.lit(0).alias("s"), "v")
+    plain = train_ivf_centroids(dv, 8, iters=2)
+    by_s = train_ivf_centroids(keyed, 8, iters=2, keys=("s",))
+    assert sorted(map(tuple, by_s.select("s", "centroid_id", "cv").collect())) == sorted(
+        (0, r["centroid_id"], r["cv"]) for r in plain.collect()
+    )
+    assigned = assign_nearest_centroid(dv, plain).select("_id", "centroid_id")
+    assigned_s = assign_nearest_centroid(keyed, by_s, keys=("s",)).select("_id", "centroid_id")
+    assert sorted(map(tuple, assigned_s.collect())) == sorted(map(tuple, assigned.collect()))
+
+
+#: Build jobs and total jobs (build + toPandas) of the Lloyd queries
+#: at the test SF. The codebook seeds rank map-side inside the first
+#: broadcast build, so training runs no driver collect of its own.
+LLOYD_JOBS = {
+    "similarity_ann_ivf": (3, 12),
+    "similarity_ann_pq": (8, 19),
+    "dedup_semantic_clusters": (9, 16),
+    "similarity_ivf_recall_sweep": (9, 27),
+}
+
+
+@pytest.mark.parametrize("name", sorted(LLOYD_JOBS))
+def test_lloyd_query_job_counts(spark, sf_dir, name):
+    from taps_spark.queries import REGISTRY, _load
+
+    _load()
+    jobs = lambda: spark.sparkContext._jsc.sc().dagScheduler().nextJobId()  # noqa: E731
+    j = jobs()
+    df = REGISTRY[name].fn(spark, sf_dir)
+    built = jobs() - j
+    df.toPandas()
+    total = jobs() - j
+    max_built, max_total = LLOYD_JOBS[name]
+    assert built <= max_built and total <= max_total, (built, total)
 
 
 def test_connected_components_star_matches_propagation(spark):
