@@ -1,5 +1,6 @@
-"""Event-stream analytics (batch forms; streaming variants live in
-taps_spark.streaming).
+"""Event-stream analytics. The streaming queries
+(taps_spark/queries/streaming.py) run these same operators on a
+watermarked stream, so one spelling serves batch and stream.
 
 Sessionization is the gaps-and-islands formulation — lag + cumulative
 flag sum over a per-user window: one shuffle on user_id, linear scan
@@ -124,11 +125,20 @@ def tumbling_window_agg(
     df: DataFrame, ts_col: str = "ts", minutes: int = 10, by: str = "event_type"
 ) -> DataFrame:
     """Tumbling event-time windows (epoch-aligned, like Structured
-    Streaming) with count + value sum per (window, key)."""
+    Streaming) with count + value sum per (window, key).
+
+    `window_start` is TIMESTAMP_NTZ in both modes: a batch frame's `ts`
+    is already NTZ, and a stream's TIMESTAMP `ts` (watermarks accept
+    only TIMESTAMP) is relabelled under the pinned UTC session."""
     return (
         df.groupBy(F.window(ts_col, f"{minutes} minutes").alias("w"), by)
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), by, "n_events", "sum_value")
+        .select(
+            F.col("w.start").cast("timestamp_ntz").alias("window_start"),
+            by,
+            "n_events",
+            "sum_value",
+        )
     )
 
 
@@ -140,14 +150,20 @@ def sliding_window_agg(
     by: str = "event_type",
 ) -> DataFrame:
     """Sliding windows: each event lands in width/slide windows
-    (F.window expands them map-side; no self-join)."""
+    (F.window expands them map-side; no self-join). `window_start` is
+    NTZ in both modes, as in tumbling_window_agg."""
     return (
         df.groupBy(
             F.window(ts_col, f"{width_minutes} minutes", f"{slide_minutes} minutes").alias("w"),
             by,
         )
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), by, "n_events", "sum_value")
+        .select(
+            F.col("w.start").cast("timestamp_ntz").alias("window_start"),
+            by,
+            "n_events",
+            "sum_value",
+        )
     )
 
 
@@ -197,41 +213,36 @@ def gap_fill_daily(
     )
 
 
-def hypertable_rollup(
-    ev: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
-    """Multi-resolution continuous-aggregate rollup (the hypertable
-    pattern): aggregate once at the fine grain (hourly), then derive
-    the coarse grain (daily) FROM the hourly partials — never
-    re-scanning raw rows — exactly how timescaledb continuous
-    aggregates / Druid rollup segments compose resolutions.
+def hourly_partials(ev: DataFrame) -> DataFrame:
+    """Fine grain of the continuous-aggregate rollup (the hypertable
+    pattern): per (hour, event_type), the event count and the value sum
+    in unrounded DECIMAL, so every coarser grain re-aggregates exactly
+    (see queries/numeric.py). A stream maintains this table
+    incrementally; daily_rollup derives the coarse grain from it.
 
-    The hourly partial keeps its value sum in unrounded DECIMAL so the
-    daily re-aggregation is exact (see queries/numeric.py); rounding
-    happens once, at the output grain. Daily also exposes what only a
-    partial-preserving rollup can answer cheaply: the peak hour's
-    event count and the number of active hours.
-
-    Scale: raw rows are touched once; the hourly frame is ~rows/3600
-    and every coarser grain aggregates the frame above it, so a
-    year of 100 TB telemetry rolls up through a few-GB intermediate.
-    One shuffle per grain on (bucket, key) — both tiny.
-    """
+    Scale: raw rows are touched once; the hourly frame is ~rows/3600,
+    so a year of 100 TB telemetry rolls up through a few-GB
+    intermediate. One shuffle on (hour, event_type)."""
     from taps_spark.queries.numeric import DECIMAL_T
 
-    hourly = ev.groupBy(
-        F.date_trunc("hour", F.col(ts_col)).alias("hour_start"),
-        F.col(key_col),
+    return ev.groupBy(
+        F.date_trunc("hour", F.col("ts")).alias("hour_start"), "event_type"
     ).agg(
         F.count("*").alias("n_events"),
-        F.sum(F.col(value_col).cast(DECIMAL_T)).alias("sum_v"),
+        F.sum(F.col("value").cast(DECIMAL_T)).alias("sum_v"),
     )
+
+
+def daily_rollup(hourly: DataFrame) -> DataFrame:
+    """Coarse grain derived FROM the hourly partials — never from raw
+    rows — exactly how timescaledb continuous aggregates / Druid rollup
+    segments compose resolutions. Rounding happens once, here. Daily
+    also exposes what only a partial-preserving rollup can answer
+    cheaply: the peak hour's event count and the number of active
+    hours. One shuffle on (day, event_type) over the small frame."""
     return hourly.groupBy(
         F.date_format(F.date_trunc("day", "hour_start"), "yyyy-MM-dd").alias("day"),
-        F.col(key_col),
+        "event_type",
     ).agg(
         F.sum("n_events").alias("n_events"),
         F.round(F.sum("sum_v"), 2).cast("double").alias("sum_value"),

@@ -1,6 +1,6 @@
 """Event-analytics query inventory (SURVEY.md §2c) over the events
-fixture — batch forms whose semantics match the streaming module's
-(taps_spark/streaming)."""
+fixture — the batch twins of the streaming queries
+(taps_spark/queries/streaming.py), which run the same operators."""
 
 from __future__ import annotations
 
@@ -378,11 +378,11 @@ def events_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed FROM the fine grain's decimal partials (raw rows scanned
     once), surfacing per-day totals plus peak-hour count and active
     hours — the hypertable/materialized-rollup pattern. See
-    operators/events.hypertable_rollup."""
-    from taps_spark.operators.events import hypertable_rollup
+    operators/events.hourly_partials and daily_rollup."""
+    from taps_spark.operators.events import daily_rollup, hourly_partials
 
     ev = load_tables(spark, sf_dir, ("events",))["events"]
-    return hypertable_rollup(ev).orderBy("day", "event_type")
+    return daily_rollup(hourly_partials(ev)).orderBy("day", "event_type")
 
 
 @query("events_hll_sketch_union")  # rows-only: HLL binary is engine-specific
@@ -2762,8 +2762,8 @@ ORDER BY tier
 def events_watermark_lateness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark-lateness audit: how late do events arrive relative to
     the high-water mark of everything already ingested? This is THE
-    input for sizing `withWatermark` on every streaming job in
-    streaming/jobs.py — pick the allowed-lateness tier that bounds the
+    input for sizing `withWatermark` on every streaming query in
+    queries/streaming.py — pick the allowed-lateness tier that bounds the
     share of events you may drop. The reference streams strictly in
     key order (lib/taps/data_stream.rb fetch loop) so lateness cannot
     exist there; an event pipeline must measure it.

@@ -1,1 +1,2 @@
-"""Structured Streaming jobs over the events table."""
+"""Structured Streaming harness over the events table; the streaming
+queries themselves live in taps_spark/queries/streaming.py."""

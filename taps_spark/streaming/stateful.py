@@ -1,10 +1,12 @@
-"""Custom stateful streaming operator: applyInPandasWithState.
+"""Per-group state for the custom stateful streaming queries
+(queries/streaming.py): the applyInPandasWithState update functions,
+their output and state schemas, and the v2 (transformWithStateInPandas)
+processor.
 
 The engine's extension point for operators Structured Streaming's
 built-ins can't express (per-key accumulators with custom merge/
-timeout logic). Demonstrated with a per-user running-stats operator
-whose single-batch output is SQL-checkable (the batch oracle computes
-the same totals), so the harness gates even the stateful path.
+timeout logic). Each query's output is SQL-checkable (the batch oracle
+computes the same totals), so the harness gates even the stateful path.
 
 Scale: state lives in the state store partitioned by user key — one
 shuffle on the key per micro-batch; Arrow-batched pandas per group,
@@ -17,18 +19,18 @@ from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-from taps_spark.streaming.jobs import read_events_stream, run_to_memory
+from pyspark.sql.streaming.state import GroupState
 
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, sum_value double"
 STATE_SCHEMA = "n bigint, total double"
 
 
-def _update_user_stats(
+def update_user_stats(
     key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
+    """Per-user event count + value total as custom streaming state;
+    with a single AvailableNow batch the emitted rows are the final
+    totals (== the batch aggregation)."""
     n, total = state.get if state.exists else (0, 0.0)
     for pdf in pdfs:
         n += len(pdf)
@@ -39,43 +41,21 @@ def _update_user_stats(
     )
 
 
-def stream_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user event count + value total maintained as custom
-    streaming state; with the fixture's single AvailableNow batch the
-    emitted rows are the final totals (== the batch aggregation)."""
-    from taps_spark.streaming.jobs import STREAM_PYTHON_STATE_PARTITIONS
-
-    ev = read_events_stream(spark, sf_dir).select("user_id", "value")
-    stats = ev.groupBy("user_id").applyInPandasWithState(
-        _update_user_stats,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return run_to_memory(
-        stats, "update", state_partitions=STREAM_PYTHON_STATE_PARTITIONS
-    )
-
-
-def stream_user_stats_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same per-user accumulator on the NEW arbitrary-state API
+def user_stats_processor():
+    """The same per-user accumulator on the NEW arbitrary-state API
     (transformWithStateInPandas, Spark 4): typed ValueState in the
-    RocksDB-backed store instead of a single tuple, explicit
-    processor lifecycle (init/handleInputRows/close).
+    RocksDB-backed store instead of a single tuple, explicit processor
+    lifecycle (init/handleInputRows/close).
 
     Scale story identical to applyInPandasWithState (state
     hash-partitioned by key, Arrow batches per group), but the v2 API
     adds independently-evolvable named state variables, state TTL,
     and timers — the surface production stateful pipelines need.
 
-    Registered CONDITIONALLY as `events_stream_stateful_user_stats_v2`
-    (taps_spark/queries/streaming.py): the v2 API serializes state
-    metadata over protobuf, so the registry entry activates only where
-    `google.protobuf` imports; in this container (no protobuf, installs
-    off-limits) the name appears in queries.skipped_queries() with the
-    reason instead, and tests/test_streaming_semantics.py importorskips.
-    """
+    Imported lazily: the v2 API serializes state metadata over
+    protobuf, so `events_stream_stateful_user_stats_v2` registers only
+    where `google.protobuf` imports (queries.skipped_queries() carries
+    the reason elsewhere)."""
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
@@ -108,23 +88,7 @@ def stream_user_stats_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
-    ev = read_events_stream(spark, sf_dir).select("user_id", "value")
-    stats = ev.groupBy("user_id").transformWithStateInPandas(
-        UserStats(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-    # Per-group Python-state stream: sized like the other
-    # applyInPandasWithState operators (cost gradient is Python group
-    # calls, the opposite of the JVM-stateful default — jobs.py law;
-    # r12 ADVICE consistency fix, untestable in this container where
-    # protobuf is absent and the query is skip-registered).
-    from taps_spark.streaming.jobs import STREAM_PYTHON_STATE_PARTITIONS
-
-    return run_to_memory(
-        stats, "update", state_partitions=STREAM_PYTHON_STATE_PARTITIONS
-    )
+    return UserStats()
 
 
 # ---------------------------------------------------------------------------
@@ -138,10 +102,10 @@ TTL_TWIN_OUTPUT_SCHEMA = (
 TTL_TWIN_STATE_SCHEMA = "days array<int>, ns array<bigint>, vs array<bigint>, seq int"
 
 #: state generations split when a user's active-day gap exceeds this —
-#: the event-time TTL clock of the twin (see stream_state_ttl_twin).
+#: the event-time TTL clock of the twin (events_stream_state_ttl_twin).
 TTL_DAYS = 2
 
-def _ttl_twin_update(
+def ttl_twin_update(
     key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
     """Per-user day-bucketed accumulator with event-time TTL semantics.
@@ -204,68 +168,4 @@ def _ttl_twin_update(
             "expired": [g < last for g, _, _ in gens],
             "seq": [seq] * len(gens),
         }
-    )
-
-
-def stream_state_ttl_twin(
-    spark: SparkSession, sf_dir: str, n_files: int = 5
-) -> DataFrame:
-    """Executable semantics twin of v2 arbitrary state's TTL/timer
-    surface on the v1 `applyInPandasWithState` path (VERDICT r7 task
-    #3: `transformWithStateInPandas` itself stays protobuf-blocked in
-    this container, so the TTL/timer SEMANTICS get running, driver-
-    gateable evidence here, and the guarded v2 registration stays for
-    when the env unblocks).
-
-    The events fixture is split into `n_files` round-robin files and
-    streamed ONE FILE PER MICRO-BATCH (real cross-batch state carry:
-    every user's buckets accumulate across ~n_files batches), through
-    a per-user processor whose state generations expire on a
-    >TTL_DAYS event-time gap — v2's ValueState TTL with the fixture's
-    event time as the clock, the deterministic choice (a wall-clock
-    TTL could never be oracle-checked). `expired` marks generations
-    closed by the TTL — the rows a v2 timer callback would have
-    emitted at expiry.
-
-    Scale: state is per-user day-aggregates (bounded by the TTL
-    horizon in production, where expired generations are emitted and
-    dropped), hash-partitioned by user in the state store; one
-    shuffle per micro-batch; Arrow-batched per group.
-    """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from taps_spark.io.tables import load_table, scratch
-    from taps_spark.streaming.jobs import STREAM_PYTHON_STATE_PARTITIONS
-
-    # A fresh split per call: the input is re-read every time.
-    src = scratch("taps_ttl_twin_")
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        F.datediff(F.to_date("ts"), F.lit("1970-01-01").cast("date")).alias("day"),
-        F.floor(F.col("value") * 1000000 + F.lit(0.5)).cast("long").alias("q"),
-        (F.col("event_id") % n_files).alias("_b"),
-    )
-    ev.repartition(n_files, "_b").drop("_b").write.mode("overwrite").parquet(src)
-    raw = (
-        spark.readStream.schema("user_id bigint, day int, q bigint")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    updates = raw.groupBy("user_id").applyInPandasWithState(
-        _ttl_twin_update,
-        outputStructType=TTL_TWIN_OUTPUT_SCHEMA,
-        stateStructType=TTL_TWIN_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    tbl = run_to_memory(updates, "update", state_partitions=STREAM_PYTHON_STATE_PARTITIONS)
-    w = Window.partitionBy("user_id")
-    return (
-        tbl.withColumn("_m", F.max("seq").over(w))
-        .filter(F.col("seq") == F.col("_m"))
-        .select(
-            "user_id", "generation", "n_events", "sum_value_micros", "expired"
-        )
-        .orderBy("user_id", "generation")
     )

@@ -408,7 +408,7 @@ def test_hypertable_rollup_matches_single_level(spark):
 
     from pyspark.sql import functions as F
 
-    from taps_spark.operators.events import hypertable_rollup
+    from taps_spark.operators.events import daily_rollup, hourly_partials
     from taps_spark.queries.numeric import dsum
 
     base = datetime.datetime(2024, 3, 1, 0, 30)
@@ -421,7 +421,7 @@ def test_hypertable_rollup_matches_single_level(spark):
         rows, "event_id long, ts timestamp_ntz, user_id long, event_type string, "
               "value double, props string"
     )
-    rolled = hypertable_rollup(ev)
+    rolled = daily_rollup(hourly_partials(ev))
     direct = ev.groupBy(
         F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"),
         "event_type",

@@ -185,13 +185,16 @@ def test_listing_filter_matches_sparks(spark):
         (r"\.localCheckpoint\(", ("io/tables.py",)),
         # session.py's warehouse and Derby dirs live for the process.
         (r"mkdtemp\(", ("io/tables.py", "session.py")),
+        # The transfer layer's stream pull keeps its own checkpointed sink.
+        (r"\.writeStream", ("streaming/jobs.py", "queries/reference.py")),
     ],
-    ids=["read_parquet", "localCheckpoint", "mkdtemp"],
+    ids=["read_parquet", "localCheckpoint", "mkdtemp", "writeStream"],
 )
 def test_one_way_to_read_parquet(pattern, owners):
     """Every parquet read under taps_spark/ goes through read_parquet,
-    every checkpoint through materialize and every temp dir a query
-    makes through scratch: each call has its owner modules."""
+    every checkpoint through materialize, every temp dir a query
+    makes through scratch and every stream a query starts through the
+    stream starter in streaming/jobs.py: each call has its owner modules."""
     pattern = re.compile(pattern)
     allowed = {os.path.join(ROOT, "taps_spark", owner) for owner in owners}
     offenders = []

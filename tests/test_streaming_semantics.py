@@ -149,14 +149,20 @@ def test_stream_checkpoint_restart_processes_only_new_data(spark, tmp_path):
     assert sorted(r["id"] for r in out.collect()) == list(range(10))
 
 
-def test_multi_microbatch_tumbling_matches_batch(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize(
+    "operator", ["tumbling_window_agg", "sliding_window_agg", "hourly_partials"]
+)
+def test_multi_microbatch_matches_batch(spark, sf_dir, tmp_path, operator):
     """The events fixture split across 4 files and streamed one file
-    per micro-batch must aggregate to EXACTLY the single-batch result:
-    complete-mode windowed state carries across micro-batch boundaries
-    regardless of how the files interleave event time."""
+    per micro-batch must aggregate to EXACTLY the batch operator's
+    result on the fixture: complete-mode windowed state carries across
+    micro-batch boundaries regardless of how the files interleave
+    event time — for every operator a streaming query runs."""
     from taps_spark.io.tables import load_table
-    from taps_spark.streaming import jobs
+    from taps_spark.operators import events
+    from taps_spark.streaming.jobs import run_to_memory
 
+    op = getattr(events, operator)
     ev = load_table(spark, sf_dir, "events")
     src = str(tmp_path / "events_split")
     # Unsorted round-robin split: every file spans the full time range,
@@ -172,31 +178,8 @@ def test_multi_microbatch_tumbling_matches_batch(spark, sf_dir, tmp_path):
     stream = raw.withColumn("ts", F.col("ts").cast("timestamp")).withWatermark(
         "ts", "30 minutes"
     )
-    agg = (
-        stream.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    result = jobs.run_to_memory(agg, "complete")
-
-    batch = (
-        ev.withColumn("ts", F.col("ts").cast("timestamp"))
-        .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    got = sorted(map(tuple, result.collect()))
-    want = sorted(map(tuple, batch.collect()))
+    got = sorted(map(tuple, run_to_memory(op(stream), "complete").collect()))
+    want = sorted(map(tuple, op(ev).collect()))
     assert got == want
 
 
@@ -240,10 +223,13 @@ def test_stateful_v2_matches_v1_when_protobuf_available(spark, sf_dir):
     pyspark's v2 state serialization dependency (google.protobuf) is
     absent."""
     pytest.importorskip("google.protobuf")
-    from taps_spark.streaming.stateful import stream_user_stats, stream_user_stats_v2
+    from taps_spark.queries.streaming import (
+        events_stream_stateful_user_stats,
+        events_stream_stateful_user_stats_v2,
+    )
 
-    v1 = sorted(map(tuple, stream_user_stats(spark, sf_dir).collect()))
-    v2 = sorted(map(tuple, stream_user_stats_v2(spark, sf_dir).collect()))
+    v1 = sorted(map(tuple, events_stream_stateful_user_stats(spark, sf_dir).collect()))
+    v2 = sorted(map(tuple, events_stream_stateful_user_stats_v2(spark, sf_dir).collect()))
     assert v1 == v2
 
 
@@ -275,17 +261,17 @@ def test_stateful_agg_on_rocksdb_state_store(spark, sf_dir):
     RocksDBStateStoreProvider (what a 100 TB cluster runs — state
     spills off-heap/disk instead of living in executor JVM heap) as
     on the default HDFS-backed in-memory provider."""
-    from taps_spark.streaming.jobs import stream_tumbling_agg
+    from taps_spark.queries.streaming import events_stream_tumbling
 
     key = "spark.sql.streaming.stateStore.providerClass"
     default = spark.conf.get(key, None)
-    baseline = sorted(map(tuple, stream_tumbling_agg(spark, sf_dir, minutes=10).collect()))
+    baseline = sorted(map(tuple, events_stream_tumbling(spark, sf_dir).collect()))
     try:
         spark.conf.set(
             key,
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
-        rocks = sorted(map(tuple, stream_tumbling_agg(spark, sf_dir, minutes=10).collect()))
+        rocks = sorted(map(tuple, events_stream_tumbling(spark, sf_dir).collect()))
     finally:
         if default:
             spark.conf.set(key, default)
